@@ -46,12 +46,6 @@ def stable_hash31(col: str | Column) -> Column:
     return F.pmod(stable_hash60(col), F.lit(HASH31_PRIME))
 
 
-def perm_hash(h31: Column, i: int) -> Column:
-    """i-th universal-hash permutation of a 31-bit hash: (a*h + b) mod P61."""
-    a, b = MINHASH_COEFFS[i]
-    return F.pmod(F.lit(a) * h31 + F.lit(b), F.lit(PERM_PRIME))
-
-
 def normalize_text(col: str | Column) -> Column:
     """Whitespace-collapsed, trimmed, lowercased text (shared with oracles:
     lower(trim(regexp_replace(text, '\\s+', ' '))))."""
@@ -92,11 +86,3 @@ def dot_product(a: str | Column, b: str | Column) -> Column:
         as_double_array(a), as_double_array(b), lambda x, y: x * y
     )
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm(col: str | Column) -> Column:
-    return F.sqrt(dot_product(col, col))
-
-
-def cosine_similarity(a: str | Column, b: str | Column) -> Column:
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))

@@ -25,40 +25,6 @@ def exact_money_sum(col: str | Column) -> Column:
     return F.sum(c.cast("decimal(18,2)")).cast("double")
 
 
-def exact_money_avg(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return (
-        F.sum(c.cast("decimal(18,2)")) / F.count(c)
-    ).cast("double")
-
-
-def summarize(
-    df: DataFrame,
-    group_cols: list[str],
-    value_col: str,
-    money: bool = False,
-) -> DataFrame:
-    """The reference's count/sum/min/max block plus avg, as one pass."""
-    sum_expr = (
-        exact_money_sum(value_col) if money else F.sum(value_col).cast("double")
-    )
-    avg_expr = (
-        exact_money_avg(value_col)
-        if money
-        else (F.sum(value_col) / F.count(value_col)).cast("double")
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("cnt"),
-        sum_expr.alias("sum_val"),
-        F.min(value_col).alias("min_val"),
-        F.max(value_col).alias("max_val"),
-        avg_expr.alias("avg_val"),
-    ]
-    if group_cols:
-        return df.groupBy(*group_cols).agg(*aggs).orderBy(*group_cols)
-    return df.agg(*aggs)
-
-
 def count_distinct(df: DataFrame, group_cols: list[str], col: str, alias: str = "n_distinct") -> DataFrame:
     aggs = [F.countDistinct(col).alias(alias)]
     if group_cols:

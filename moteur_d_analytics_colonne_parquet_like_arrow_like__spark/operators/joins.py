@@ -21,13 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def broadcast_join(
-    fact: DataFrame, dim: DataFrame, on: list[str] | str | Column, how: str = "inner"
-) -> DataFrame:
-    """Fact ⨝ broadcast(dim): no shuffle of the fact side."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
-
-
 def pin_exploding_join(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
     """Pin the partitioning of a relation feeding an EXPLODING equi-join
     (output rows ≫ input rows, e.g. a posting-list / bucket self-join).

@@ -592,22 +592,6 @@ def image_resize(media: DataFrame, factor: int = 2) -> DataFrame:
     return media.mapInPandas(_resize, schema=schema)
 
 
-def media_summary(features: DataFrame) -> DataFrame:
-    """Metadata-only rollup (never touches blob bytes): per-kind counts,
-    byte totals, mean feature norm."""
-    return (
-        features.groupBy("kind")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("byte_len").alias("total_bytes"),
-            F.avg(F.aggregate("feature", F.lit(0.0), lambda a, x: a + x * x)).alias(
-                "mean_sq_feature"
-            ),
-        )
-        .orderBy("kind")
-    )
-
-
 def image_dhash(media: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) over 24-bit BMP blobs: decode
     the REAL pixel data (bottom-up rows, BGR triples, 4-byte row stride),

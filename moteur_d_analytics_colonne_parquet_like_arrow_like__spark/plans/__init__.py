@@ -78,16 +78,6 @@ def join_strategies(df: DataFrame) -> list[str]:
     )
 
 
-def uses_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in join_strategies(df)
-
-
-def codegen_spans(df: DataFrame) -> int:
-    """Number of WholeStageCodegen spans (wider is better for the hot path)."""
-    plan = formatted_plan(df)
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", plan)))
-
-
 def _walk_logical(jnode):
     yield jnode
     ch = jnode.children()

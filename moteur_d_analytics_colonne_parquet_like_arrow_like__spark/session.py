@@ -16,10 +16,48 @@ Local test mode reads ``SPARK_GRAFT_CPUS`` (driver contract) to size
 
 from __future__ import annotations
 
+import logging
 import os
 import urllib.parse
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger(__name__)
+
+
+def local_driver_memory(
+    meminfo: str = "/proc/meminfo",
+    cgroup_limits: tuple[str, ...] = (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ),
+) -> str:
+    """Default local ``spark.driver.memory``: 60% of the smaller of
+    ``MemTotal`` and the cgroup memory limit, capped at 48g. The rest is
+    for the JVM's off-heap memory and the Python workers; a fixed 48g let
+    the heap outgrow a 15 GB host until the kernel killed the JVM partway
+    through the test suite. Unreadable or unlimited sources are skipped;
+    with none left the cap is used."""
+    limits = []
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)
+    except (OSError, ValueError, IndexError):
+        pass
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw))
+    if not limits:
+        return "48g"
+    gb = int(min(limits) * 0.6) // 2**30
+    return f"{max(1, min(48, gb))}g"
 
 
 def _cpus() -> int:
@@ -42,6 +80,13 @@ def get_spark(
 
     On a real cluster, pass ``master=None`` and let spark-submit decide;
     locally defaults to ``local[N]`` with N from ``SPARK_GRAFT_CPUS``.
+
+    Local sessions size the driver heap from the host
+    (:func:`local_driver_memory`; ``SPARK_GRAFT_DRIVER_MEM`` overrides it)
+    and swap Hadoop's checksum filesystem for ``RawLocalFileSystem``, so
+    no ``.crc`` sidecar is written or verified on ANY ``file://`` read or
+    write in the session: scans, sinks and checkpoints alike. Corruption of
+    local files is then caught only by the file formats' own checks.
     """
     cpus = _cpus() or (os.cpu_count() or 4)
     builder = SparkSession.builder.appName(app_name)
@@ -87,7 +132,9 @@ def get_spark(
     }
     if master and master.startswith("local"):
         # local mode: one JVM; the driver heap is the only memory knob.
-        conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or local_driver_memory()
+        logger.info("local spark.driver.memory = %s", mem)
+        conf.setdefault("spark.driver.memory", mem)
         # Test-scale inputs are single ~25 MB parquet files; the 128 MB
         # default split puts the whole scan on one core. Split fine so all
         # local cores scan in parallel. On a cluster (master unset) the

@@ -55,13 +55,25 @@ def _parquet_files(path: str) -> list[str]:
     return [path]
 
 
+def files_key(*paths: str) -> tuple[tuple[str, int, int], ...]:
+    """``(file, size, mtime_ns)`` of every parquet file under ``paths``:
+    the identity of local inputs, which changes when data is rewritten at
+    the same path. Key for anything derived from those inputs."""
+    out = []
+    for path in paths:
+        for f in _parquet_files(path):
+            st = os.stat(f)
+            out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(out)
+
+
 # Footer-probe cache: the testdata's ts encoding has already changed once
 # between rounds (TIMESTAMP(NANOS) → TIMESTAMP(MICROS)), so the loaders
 # detect the type they actually got instead of hard-coding one vintage.
-# Keyed by (file, mtime) for every part file, so a dataset regenerated in
-# place mid-session re-probes instead of serving a stale vintage; a footer
-# read is driver-side metadata only.
-_TS_PROBE_CACHE: dict[tuple[tuple[str, float], ...], str] = {}
+# Keyed by ``files_key``, so a dataset regenerated in place mid-session
+# re-probes instead of serving a stale vintage; a footer read is
+# driver-side metadata only.
+_TS_PROBE_CACHE: dict[tuple[tuple[str, int, int], ...], str] = {}
 
 
 def probe_events_ts_type(path: str) -> str:
@@ -72,15 +84,14 @@ def probe_events_ts_type(path: str) -> str:
     the footer min/max stats: a silent re-encoding that lands timestamps
     outside 2000-2100 fails loudly here rather than corrupting every
     downstream window/join (the round-3 failure mode)."""
-    files = _parquet_files(path)
-    cache_key = tuple((f, os.path.getmtime(f)) for f in files)
+    cache_key = files_key(path)
     cached = _TS_PROBE_CACHE.get(cache_key)
     if cached is not None:
         return cached
     import pyarrow.parquet as pq
 
     kinds: dict[str, str] = {}
-    for f in files:
+    for f, _, _ in cache_key:
         pf = pq.ParquetFile(f)
         kind = str(pf.schema_arrow.field("ts").type)
         kinds[f] = kind

@@ -80,10 +80,11 @@ def _events_raw_schema(ts_kind: str) -> T.StructType:
 # data, no offsets, no state — so rebuilding it per bounded replay re-pays
 # ~40-60 ms of py4j plan assembly for an identical object. Same class as
 # the adjudicated session-keyed table-handle cache for batch reads (r2):
-# keyed on the session's application id + the exact part-file set with
-# mtimes, so a regenerated dataset (or a different session) rebuilds
-# instead of serving a stale plan. Plans only, never results.
-_STREAM_PLAN_CACHE: dict[tuple, DataFrame] = {}
+# one entry per (session application id, events path), holding the plan
+# and the ``files_key`` it was built from; a regenerated or grown dataset
+# replaces the entry instead of serving a stale plan or adding one more.
+# Plans only, never results.
+_STREAM_PLAN_CACHE: dict[tuple[str, str], tuple[tuple, DataFrame]] = {}
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,7 +93,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     part files (relayouts, production tables) is streamed directly, while a
     single ``events.parquet`` file (driver testdata) is streamed from its
     parent dir with a glob confining the stream to that one file."""
-    from ..sources.catalog import _parquet_files, probe_events_ts_type
+    from ..sources.catalog import files_key, probe_events_ts_type
 
     path = os.path.join(sf_dir, "events.parquet")
     # Probe the parquet footer (driver-side metadata + min/max sanity check)
@@ -105,13 +106,11 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if ts_kind == "timestamp[ns]":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    cache_key = (
-        spark.sparkContext.applicationId,
-        tuple((f, os.path.getmtime(f)) for f in _parquet_files(path)),
-    )
+    cache_key = (spark.sparkContext.applicationId, path)
+    stamp = files_key(path)
     cached = _STREAM_PLAN_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[0] == stamp:
+        return cached[1]
     schema = _events_raw_schema(ts_kind)
     if os.path.isdir(path):
         raw = spark.readStream.schema(schema).parquet(path)
@@ -129,7 +128,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # TIMESTAMP — same instants the legacy path produced, no-op if
         # already TIMESTAMP.
         out = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    _STREAM_PLAN_CACHE[cache_key] = out
+    _STREAM_PLAN_CACHE[cache_key] = (stamp, out)
     return out
 
 

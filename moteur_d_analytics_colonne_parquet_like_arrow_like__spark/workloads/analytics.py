@@ -7,10 +7,13 @@ SURVEY.md §2 extension surface).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators import joins, similarity, stats
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
+from ._scratch import derived
 
 _CORR_COLS = ["l_discount", "l_extendedprice", "l_quantity", "l_tax"]
 
@@ -106,17 +109,10 @@ def q_feature_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stats.equidepth_histogram(li, "price_100", n_buckets=10)
 
 
-def q_table_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC between two snapshot-table versions: v0 = an orders subset,
-    v1 = v0 after a copy-on-write MERGE (inserts + price updates +
-    deletes). ``snapshot_diff`` (sources/snapshots.py) reads only the
-    files the merge actually rewrote — shared manifest files are pruned
-    wholesale — and classifies per-key changes; the oracle recomputes
-    insert/update/delete rows straight from the orders table, so both
-    the merge semantics and the diff classification are value-checked."""
-    import hashlib
-
-    from ..sources.snapshots import SnapshotTable, snapshot_diff
+def _snapdiff_table(spark: SparkSession, sf_dir: str):
+    """The snapshot table behind table_snapshot_diff and
+    table_incremental_view (built once per orders input)."""
+    from ..sources.snapshots import SnapshotTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -124,25 +120,9 @@ def q_table_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("o_totalprice", 2).alias("price_r"),
     )
     base = orders.where(F.col("o_orderkey") % 5 != 4)
-    path = f"/tmp/snapdiff_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    t = SnapshotTable(path)
-    ver = t.latest_version()
-    if ver == 0:
-        # A crash between append and merge leaves the fixture at v0;
-        # re-running the old blind `!= 1` guard would re-append base on
-        # top (duplicate keys) before merging. The fixture is ours and
-        # derived, so self-heal: drop the partial state and rebuild.
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
-        t = SnapshotTable(path)
-        ver = None
-    elif ver not in (None, 1):
-        raise RuntimeError(
-            f"snapdiff fixture at {path} is at unexpected version {ver}; "
-            "delete the directory to rebuild"
-        )
-    if ver is None:
+    def build(d: str) -> None:
+        t = SnapshotTable(d)
         t.append(base.repartition(8))
         inserts = orders.where(
             (F.col("o_orderkey") % 5 == 4) & (F.col("o_orderkey") % 3 == 0)
@@ -159,6 +139,23 @@ def q_table_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=["o_orderkey"],
             delete_col="__del",
         )
+
+    return SnapshotTable(
+        derived("snapdiff", [table_path(sf_dir, "orders")], build)
+    )
+
+
+def q_table_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CDC between two snapshot-table versions: v0 = an orders subset,
+    v1 = v0 after a copy-on-write MERGE (inserts + price updates +
+    deletes). ``snapshot_diff`` (sources/snapshots.py) reads only the
+    files the merge actually rewrote — shared manifest files are pruned
+    wholesale — and classifies per-key changes; the oracle recomputes
+    insert/update/delete rows straight from the orders table, so both
+    the merge semantics and the diff classification are value-checked."""
+    from ..sources.snapshots import snapshot_diff
+
+    t = _snapdiff_table(spark, sf_dir)
     d = snapshot_diff(t, spark, 0, 1, keys=["o_orderkey"])
     return d.select(
         "change_op",
@@ -185,16 +182,21 @@ def q_sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.recall_report(approx, exact)
 
 
+def _ivfsq_path(sf_dir: str) -> str:
+    """Index path for ``ivf_sq_topk``, which writes and fingerprints the
+    index itself; only the directory is keyed on the embeddings input."""
+    d = derived("ivfsq", [table_path(sf_dir, "embeddings")], lambda d: None)
+    return os.path.join(d, "index")
+
+
 def q_sim_ivf_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed production ANN layout: IVF partition pruning over
     symmetric int8-quantized codes (operators/similarity.ivf_sq_topk) —
     a probe reads one bucket directory of 4x-compressed codes and ranks
     by integer dot product."""
-    import hashlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
-    path = f"/tmp/ivfsq_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    path = _ivfsq_path(sf_dir)
     return similarity.ivf_sq_topk(
         spark, path, emb, queries, "vec_id", "embedding", k=5, dim=64
     ).orderBy("query_id", "rnk")
@@ -208,11 +210,9 @@ def q_sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     most of the single-probe recall gap. Rankings are gate-proven
     elsewhere; the report is per-query set intersections over
     queries x k rows."""
-    import hashlib
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
-    path = f"/tmp/ivfsq_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
+    path = _ivfsq_path(sf_dir)
     exact = similarity.cosine_topk_exact_baseline(
         emb, queries, "vec_id", "embedding", k=10
     )
@@ -311,8 +311,6 @@ def q_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     still sees the original 2 columns. The output aggregates both
     reads; the oracle recomputes each version's content from orders, so
     the widened-read NULL semantics are value-checked."""
-    import hashlib
-
     from ..sources.snapshots import SnapshotTable
 
     orders = load_table(spark, sf_dir, "orders")
@@ -324,23 +322,13 @@ def q_table_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.round("o_totalprice", 2).alias("price_r"),
     )
-    path = f"/tmp/snapevo_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    t = SnapshotTable(path)
-    ver = t.latest_version()
-    if ver == 0:  # crash between the two appends: a blind re-append
-        import shutil  # would duplicate v0's rows — rebuild instead
 
-        shutil.rmtree(path, ignore_errors=True)
-        t = SnapshotTable(path)
-        ver = None
-    elif ver not in (None, 1):
-        raise RuntimeError(
-            f"snapevo fixture at {path} is at unexpected version {ver}; "
-            "delete the directory to rebuild"
-        )
-    if ver is None:
+    def build(d: str) -> None:
+        t = SnapshotTable(d)
         t.append(v0_rows.repartition(4))
         t.append(v1_rows.repartition(4), allow_evolution=True)
+
+    t = SnapshotTable(derived("snapevo", [table_path(sf_dir, "orders")], build))
     latest = t.read(spark, 1)
     by_status = latest.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
@@ -439,15 +427,10 @@ def q_table_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must land exactly on the view recomputed from v1, which is what
     the oracle derives from the orders table directly. The refresh cost
     is O(changes); the exactness comes from decimal delta algebra."""
-    import hashlib
-
     from ..operators import views
-    from ..sources.snapshots import SnapshotTable, snapshot_diff
+    from ..sources.snapshots import snapshot_diff
 
-    # Same table the snapshot-diff gate query builds (shared /tmp cache).
-    q_table_snapshot_diff(spark, sf_dir).limit(0).collect()
-    path = f"/tmp/snapdiff_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    t = SnapshotTable(path)
+    t = _snapdiff_table(spark, sf_dir)
     view0 = views.agg_view(t.read(spark, 0), "o_orderstatus", "price_r")
     diff = snapshot_diff(t, spark, 0, 1, keys=["o_orderkey"])
     maintained = views.maintain_agg_view(
@@ -2232,9 +2215,6 @@ def q_table_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequencing check: delete entries scope to the files present when
     they committed, so re-inserted rows read back. The oracle computes
     the same final state straight from orders."""
-    import hashlib
-    import shutil
-
     from ..sources.snapshots import SnapshotTable
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -2242,19 +2222,9 @@ def q_table_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.round("o_totalprice", 2).alias("price_r"),
     )
-    path = f"/tmp/snapdv_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    t = SnapshotTable(path)
-    ver = t.latest_version()
-    if ver in (0, 1):  # crash-left partial build: rebuild from scratch
-        shutil.rmtree(path, ignore_errors=True)
-        t = SnapshotTable(path)
-        ver = None
-    elif ver not in (None, 2):
-        raise RuntimeError(
-            f"snapdv fixture at {path} is at unexpected version {ver}; "
-            "delete the directory to rebuild"
-        )
-    if ver is None:
+
+    def build(d: str) -> None:
+        t = SnapshotTable(d)
         t.append(orders.repartition(8))
         t.delete_where(
             spark, ["o_orderkey"], F.col("o_orderkey") % 7 == 3
@@ -2263,6 +2233,8 @@ def q_table_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderkey") % 7 == 3) & (F.col("o_orderkey") % 3 == 0)
         ).withColumn("price_r", F.round(F.col("price_r") + 10, 2))
         t.append(reinserts.repartition(2))
+
+    t = SnapshotTable(derived("snapdv", [table_path(sf_dir, "orders")], build))
     return t.read(spark).orderBy("o_orderkey")
 
 

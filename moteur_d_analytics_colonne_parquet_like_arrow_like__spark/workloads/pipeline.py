@@ -10,11 +10,14 @@ approximately similar.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import HASH31_PRIME, MINHASH_COEFFS, PERM_PRIME
 from ..operators import dedup, multimodal, similarity, sorts, text
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
+from ._scratch import derived
 
 # ---------------------------------------------------------------- SQL pieces
 
@@ -167,17 +170,14 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-layout ANN: the corpus is persisted partitioned by LSH bucket
     (once per sf, cached on disk), then probed with partition pruning —
     results identical to single-probe LSH top-k, which the oracle verifies."""
-    import hashlib
-    import os
-
     emb = _embeddings(spark, sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = f"/tmp/ivf_layout_{tag}"
-    marker = os.path.join(path, "_IVF_DONE")
-    if not os.path.exists(marker):
-        similarity.ivf_write(emb, "vec_id", "embedding", path)
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    def build(d: str) -> None:
+        similarity.ivf_write(emb, "vec_id", "embedding", os.path.join(d, "ivf"))
+
+    path = os.path.join(
+        derived("ivf_layout", [table_path(sf_dir, "embeddings")], build), "ivf"
+    )
     queries = emb.where(F.col("vec_id") < 10)
     return similarity.ivf_topk(
         spark, path, queries, "vec_id", "embedding", k=5

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import dedup, text
 from ..sources.catalog import load_table
+from ._scratch import run_dir
 from .pipeline import (
     _CLUSTERS_SQL,
     _EN_WORDS,
@@ -819,7 +820,6 @@ def e2e_stage_frames(
     max_bucket_size: int | str = "advised",
     materialize_dir: str | None = None,
     check_cap: bool = False,
-    persist_stages: bool = False,
     materialize: str = "explicit",
 ) -> dict[str, DataFrame]:
     """The curation funnel, one DataFrame per cumulative stage — shared
@@ -866,14 +866,6 @@ def e2e_stage_frames(
             path = f"{materialize_dir}/{name}.parquet"
             df.write.mode("overwrite").parquet(path)
             return spark.read.parquet(path)
-        if persist_stages:
-            # the blanket-persist arm of the r10/r11 A/B — kept as a
-            # measurable configuration precisely because it LOST the
-            # r10 A/B (cache barrier defeats column pruning + the
-            # broadcast semi-join); tools/pipeline_e2e_ab.py re-measures
-            # it against stage materialization so the refutation stays
-            # current data, not lore
-            return df.persist()
         return df
 
     docs = _documents(spark, sf_dir).select("doc_id", "source", "text")
@@ -1007,13 +999,13 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["pipeline_end_to_end"] = q_pipeline_end_to_end
 
 
-def _e2e_ctes(max_bucket: int | str = "advised") -> str:
+def _e2e_ctes() -> str:
     """The composed funnel's full CTE chain (``WITH RECURSIVE`` … ``c``)
     — shared by the ``pipeline_end_to_end`` span oracle, the
     ``pipeline_funnel_report`` stage-count oracle, and the
-    ``pipeline_end_to_end_advised`` / ``_auto`` oracles so the gates can
-    never drift apart on funnel semantics. Default ``max_bucket`` tracks
-    ``e2e_stage_frames``'s default (census-advised since r13)."""
+    ``pipeline_end_to_end_advised`` / ``_auto`` gates (which reuse the
+    span oracle) so the gates can never drift apart on funnel semantics.
+    The bucket cap is ``e2e_stage_frames``'s default, census-advised."""
     from .pipeline import (
         _H60,
         _minhash_pairs_sql,
@@ -1034,7 +1026,7 @@ def _e2e_ctes(max_bucket: int | str = "advised") -> str:
         ),
         {_shingle_cte(3, src="s1")},
         {_minhash_sig_sql(16)},
-        {_minhash_pairs_sql(max_bucket=max_bucket)},
+        {_minhash_pairs_sql(max_bucket="advised")},
         {_CLUSTERS_SQL},
         s2 AS MATERIALIZED (
             SELECT s1.* FROM s1
@@ -1125,39 +1117,11 @@ ORACLES["pipeline_end_to_end"] = f"""
     """
 
 
-def q_pipeline_end_to_end_advised(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The composed curation pipeline with the CENSUS-ADVISED bucket cap
-    passed EXPLICITLY (VERDICT r10 item 3, closed end-to-end): the
-    near-dup stage's hot-bucket cap comes from ``bucket_cap_advisor``
-    instead of a frozen literal — the configuration a growing corpus can
-    never silently outgrow. Since r13 this is also ``e2e_stage_frames``'s
-    DEFAULT (VERDICT r12 item 2 flipped the proven-better setting on),
-    so this gate is now the explicit spelling of the default composition
-    — kept registered because its oracle + sweep history is the standing
-    proof the advised path never drifted, and because an explicit
-    ``"advised"`` survives any future default change. The DuckDB oracle
-    recomputes the SAME census and advised cap in SQL
-    (``_minhash_pairs_sql(max_bucket="advised")``), so the driver
-    verifies the advisor, the cap application, and the full downstream
-    funnel in one hash."""
-    return e2e_stage_frames(spark, sf_dir, max_bucket_size="advised")[
-        "s5"
-    ].orderBy("doc_id")
-
-
-QUERIES["pipeline_end_to_end_advised"] = q_pipeline_end_to_end_advised
-
-ORACLES["pipeline_end_to_end_advised"] = f"""
-        {_e2e_ctes(max_bucket="advised")}
-        SELECT doc_id, source, n_tok AS n_tokens,
-               round(keep_frac, 9) AS keep_frac_r,
-               (cum - n_tok) // 512 AS start_seq,
-               (cum - n_tok) % 512 AS start_off,
-               (cum - 1) // 512 AS end_seq
-        FROM c ORDER BY doc_id
-    """
+# Since r13 the census-advised cap is ``e2e_stage_frames``'s default, so
+# the advised gate names the same composition and the same oracle; it
+# stays registered for its signature history.
+QUERIES["pipeline_end_to_end_advised"] = q_pipeline_end_to_end
+ORACLES["pipeline_end_to_end_advised"] = ORACLES["pipeline_end_to_end"]
 
 
 def q_pipeline_end_to_end_auto(
@@ -1173,46 +1137,23 @@ def q_pipeline_end_to_end_auto(
     e2e oracle verbatim: materialization is an execution strategy, and
     this gate's hash-match is the proof it never changes a value.
 
-    The scratch dir is a fresh ``mkdtemp`` per run (ADVICE r12: a fixed
-    world-shared /tmp path let two concurrent runs at the same SF
-    overwrite each other's stage files between the write and the
-    re-read, and a predictable /tmp name is a pre-creation hazard on
-    shared boxes). It is NOT eagerly deleted: the returned frame is
-    lazy and its lineage reads the stage parquet, so deletion belongs
-    to whoever consumes the frame — uniqueness (not cleanup) is what
-    closes the clobber/symlink hazard; the per-process dirs are bytes-
-    bounded by the fixture corpus, reaped at interpreter exit (atexit —
-    by then every consumer of the lazy frame has run), and covered by
-    the OS tmp reaper if the process dies hard. Accumulation bound: one
-    dir per GATE INVOCATION until exit (a handful in any driver/sweep
-    process); a long-lived service replaying this query should call
-    ``e2e_stage_frames`` directly with its own materialize_dir
-    lifecycle policy instead of this test-gate wrapper."""
-    import atexit
-    import shutil
-    import tempfile
-
-    scratch = tempfile.mkdtemp(prefix="e2e_auto_mat_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    The stage files go to a private ``run_dir`` per call, so two
+    concurrent runs at one SF never overwrite each other's stage files
+    between the write and the re-read. One directory per call lives
+    until interpreter exit; a long-lived service replaying this query
+    should call ``e2e_stage_frames`` directly with its own
+    materialize_dir lifecycle instead."""
     return e2e_stage_frames(
         spark,
         sf_dir,
-        materialize_dir=scratch,
+        materialize_dir=run_dir("e2e_auto_mat"),
         materialize="auto",
     )["s5"].orderBy("doc_id")
 
 
 QUERIES["pipeline_end_to_end_auto"] = q_pipeline_end_to_end_auto
 
-ORACLES["pipeline_end_to_end_auto"] = f"""
-        {_e2e_ctes()}
-        SELECT doc_id, source, n_tok AS n_tokens,
-               round(keep_frac, 9) AS keep_frac_r,
-               (cum - n_tok) // 512 AS start_seq,
-               (cum - n_tok) % 512 AS start_off,
-               (cum - 1) // 512 AS end_seq
-        FROM c ORDER BY doc_id
-    """
+ORACLES["pipeline_end_to_end_auto"] = ORACLES["pipeline_end_to_end"]
 
 
 def e2e_funnel_flags(

@@ -9,9 +9,12 @@ twin is ``stream_session_window``), and the long tail of scalar functions.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
+from ._scratch import derived
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -120,23 +123,17 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     then every version read back via its manifest in one unioned plan.
     The oracle recomputes each version's content directly from lineitem,
     so manifest isolation AND time travel are value-checked."""
-    import hashlib
-
     from ..sources.snapshots import SnapshotTable
 
     li = _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
-    path = f"/tmp/snaptbl_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    t = SnapshotTable(path)
-    if t.latest_version() != 2:
-        # crash-left partial build (v0/v1 only) would duplicate the A
-        # slice on a blind re-append; the fixture is derived, so rebuild
-        import shutil
 
-        shutil.rmtree(path, ignore_errors=True)
-        t = SnapshotTable(path)
+    def build(d: str) -> None:
+        t = SnapshotTable(d)
         t.append(li.where(F.col("l_returnflag") == "A"))
         t.append(li.where(F.col("l_returnflag") == "R"))
         t.overwrite(li.where(F.col("l_returnflag") == "N"))
+
+    t = SnapshotTable(derived("snaptbl", [table_path(sf_dir, "lineitem")], build))
     legs = [
         t.read(spark, version=v).agg(
             F.lit(v).cast("int").alias("version"),
@@ -160,27 +157,22 @@ def q_source_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and aggregated.
     The oracle aggregates the ORIGINAL parquet tables — any value mangled
     by the writers/readers diverges the hash."""
-    import hashlib
-    import os
-
     from ..sources import formats
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     supp = _t(spark, sf_dir, "supplier")
-    jpath = f"/tmp/fmt_jsonl_{tag}"
-    cpath = f"/tmp/fmt_csv_{tag}"
-    if not os.path.exists(os.path.join(jpath, "_SUCCESS")):
-        formats.write_json(docs, jpath)
-    if not os.path.exists(os.path.join(cpath, "_SUCCESS")):
-        formats.write_csv(supp, cpath)
     nat = _t(spark, sf_dir, "nation")
-    opath = f"/tmp/fmt_orc_{tag}"
-    if not os.path.exists(os.path.join(opath, "_SUCCESS")):
-        formats.write_orc(nat, opath)
-    docs_back = formats.read_json(spark, jpath, schema=docs.schema)
-    supp_back = formats.read_csv(spark, cpath, schema=supp.schema)
-    nat_back = formats.read_orc(spark, opath, schema=nat.schema)
+
+    def build(d: str) -> None:
+        formats.write_json(docs, os.path.join(d, "jsonl"))
+        formats.write_csv(supp, os.path.join(d, "csv"))
+        formats.write_orc(nat, os.path.join(d, "orc"))
+
+    inputs = [table_path(sf_dir, n) for n in ("documents", "supplier", "nation")]
+    d = derived("fmt", inputs, build)
+    docs_back = formats.read_json(spark, os.path.join(d, "jsonl"), schema=docs.schema)
+    supp_back = formats.read_csv(spark, os.path.join(d, "csv"), schema=supp.schema)
+    nat_back = formats.read_orc(spark, os.path.join(d, "orc"), schema=nat.schema)
     dj = docs_back.agg(
         F.count(F.lit(1)).alias("jsonl_docs"),
         F.sum(F.length("text")).alias("jsonl_chars"),
@@ -208,22 +200,19 @@ def q_source_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Double sums route through round->DECIMAL like the CSV twin,
     so the check is order-independent; c_name's '#' and real text
     content exercise escaping."""
-    import hashlib
-    import os
-
     from ..sources import formats
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     cust = _t(spark, sf_dir, "customer")
     regn = _t(spark, sf_dir, "region")
-    xc = f"/tmp/fmt_xml_cust_{tag}"
-    xr = f"/tmp/fmt_xml_regn_{tag}"
-    if not os.path.exists(os.path.join(xc, "_SUCCESS")):
-        formats.write_xml(cust, xc)
-    if not os.path.exists(os.path.join(xr, "_SUCCESS")):
-        formats.write_xml(regn, xr)
-    cust_back = formats.read_xml(spark, xc, schema=cust.schema)
-    regn_back = formats.read_xml(spark, xr, schema=regn.schema)
+
+    def build(d: str) -> None:
+        formats.write_xml(cust, os.path.join(d, "cust"))
+        formats.write_xml(regn, os.path.join(d, "regn"))
+
+    inputs = [table_path(sf_dir, n) for n in ("customer", "region")]
+    d = derived("fmt_xml", inputs, build)
+    cust_back = formats.read_xml(spark, os.path.join(d, "cust"), schema=cust.schema)
+    regn_back = formats.read_xml(spark, os.path.join(d, "regn"), schema=regn.schema)
     dc = cust_back.agg(
         F.count(F.lit(1)).alias("xml_customers"),
         F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
@@ -268,9 +257,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials instead of rescanning history. The oracle aggregates the
     union directly, so the merge algebra (count+count, sum+sum) is
     value-checked."""
-    import hashlib
-    import os
-
     li = _t(spark, sf_dir, "lineitem")
 
     def partial(flag: str) -> DataFrame:
@@ -283,11 +269,12 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    base_path = f"/tmp/incr_agg_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(base_path, "_SUCCESS")):
-        partial("A").write.mode("overwrite").parquet(base_path)  # history
+    def build(d: str) -> None:  # history
+        partial("A").write.parquet(os.path.join(d, "partial"))
+
+    base = derived("incr_agg", [table_path(sf_dir, "lineitem")], build)
     merged = (
-        spark.read.parquet(base_path)
+        spark.read.parquet(os.path.join(base, "partial"))
         .unionByName(partial("R"))  # the new increment
         .groupBy("l_linestatus")
         .agg(F.sum("cnt").alias("cnt"), F.sum("qty").alias("qty"))
@@ -347,16 +334,15 @@ def q_events_time_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping groups — the standard clustering for append-only event
     tables. The range aggregate is oracle-checked against the unsorted
     original, proving the relayout is content-preserving."""
-    import hashlib
-    import os
-
     from ..sources.writer import write_sorted
 
     events = _t(spark, sf_dir, "events")
-    path = f"/tmp/events_tsorted_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_sorted(events, path, ["ts"], num_files=8)
-    sorted_events = spark.read.parquet(path)
+
+    def build(d: str) -> None:
+        write_sorted(events, os.path.join(d, "events"), ["ts"], num_files=8)
+
+    path = derived("events_tsorted", [table_path(sf_dir, "events")], build)
+    sorted_events = spark.read.parquet(os.path.join(path, "events"))
     lo, hi = "2024-01-02 00:00:00", "2024-01-03 00:00:00"
     return (
         sorted_events.where(

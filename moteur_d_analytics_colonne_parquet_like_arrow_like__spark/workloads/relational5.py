@@ -17,9 +17,12 @@ identically (see workloads/__init__ authoring rules).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
+from ._scratch import derived, run_dir
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -412,9 +415,6 @@ def q_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Only data files containing a matched key are rewritten (see
     SnapshotTable.merge); money rides integer cents so every engine sums
     exactly."""
-    import hashlib
-    import shutil
-
     from ..sources.snapshots import SnapshotTable
 
     orders = _t(spark, sf_dir, "orders")
@@ -425,10 +425,9 @@ def q_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     )
-    path = f"/tmp/mergetbl_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    t = SnapshotTable(path)
-    if t.latest_version() != 1:
-        shutil.rmtree(path, ignore_errors=True)
+
+    def build(d: str) -> None:
+        t = SnapshotTable(d)
         t.append(base.where(F.col("k") % 3 == 0).repartition(8))
         source = base.where(F.col("k") % 2 == 0).select(
             "k",
@@ -437,6 +436,8 @@ def q_table_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("k") % 12 == 0).alias("is_del"),
         )
         t.merge(spark, source, keys=["k"], delete_col="is_del")
+
+    t = SnapshotTable(derived("mergetbl", [table_path(sf_dir, "orders")], build))
     return (
         t.read(spark)
         .groupBy("pri")
@@ -481,9 +482,6 @@ def q_incremental_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     lgK=12 is ~1.6%%, so the boolean is stably true) — the
     agg_approx_sketches pattern applied to a persisted, mergeable sketch.
     """
-    import hashlib
-    import os
-
     li = _t(spark, sf_dir, "lineitem")
 
     def sketch(flag: str) -> DataFrame:
@@ -493,11 +491,12 @@ def q_incremental_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.hll_sketch_agg("l_partkey").alias("hll"))
         )
 
-    base_path = f"/tmp/incr_hll_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(base_path, "_SUCCESS")):
-        sketch("A").write.mode("overwrite").parquet(base_path)  # history
+    def build(d: str) -> None:  # history
+        sketch("A").write.parquet(os.path.join(d, "hll"))
+
+    base = derived("incr_hll", [table_path(sf_dir, "lineitem")], build)
     merged = (
-        spark.read.parquet(base_path)
+        spark.read.parquet(os.path.join(base, "hll"))
         .unionByName(sketch("R"))  # the new increment
         .groupBy("l_linestatus")
         .agg(
@@ -652,18 +651,22 @@ def q_events_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_time_pruned only serves its leading column. The aggregate is
     oracle-checked against the ORIGINAL unsorted events, proving the
     relayout is content-preserving."""
-    import hashlib
-    import os
-
     from ..sources.writer import write_zordered
 
     events = _t(spark, sf_dir, "events")
-    path = f"/tmp/events_zorder_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build(d: str) -> None:
         write_zordered(
-            events, path, ["user_id", "ts"], bits=12, num_files=8, normalize=True
+            events,
+            os.path.join(d, "events"),
+            ["user_id", "ts"],
+            bits=12,
+            num_files=8,
+            normalize=True,
         )
-    z = spark.read.parquet(path)
+
+    path = derived("events_zorder", [table_path(sf_dir, "events")], build)
+    z = spark.read.parquet(os.path.join(path, "events"))
     lo, hi = "2024-01-02 00:00:00", "2024-01-04 00:00:00"
     return (
         z.where(
@@ -764,9 +767,6 @@ def q_source_col_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     path — and is aggregated. The oracle aggregates the ORIGINAL parquet
     table: any byte mangled by the encoders, the footer parser, or the
     partition-parallel decode diverges the hash."""
-    import hashlib
-    import os
-
     from ..sources import colfile
     from ..sources.col_datasource import register_col_datasource
 
@@ -780,9 +780,12 @@ def q_source_col_native(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("s_acctbal_cents"),
     )
-    path = f"/tmp/col_native_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}.col"
-    if not os.path.exists(path):
-        colfile.write_col(supp, path, rows_per_group=100)
+
+    def build(d: str) -> None:
+        colfile.write_col(supp, os.path.join(d, "supplier.col"), rows_per_group=100)
+
+    d = derived("col_native", [table_path(sf_dir, "supplier")], build)
+    path = os.path.join(d, "supplier.col")
     register_col_datasource(spark)
     back = spark.read.format("col").load(path)
     return back.agg(
@@ -1357,9 +1360,6 @@ def q_incremental_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed resolution, no adaptivity to density; pick the grid from the
     domain (money here) where that is acceptable.
     """
-    import hashlib
-    import os
-
     li = _t(spark, sf_dir, "lineitem")
 
     def hist(flag: str) -> DataFrame:
@@ -1373,13 +1373,12 @@ def q_incremental_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    base_path = (
-        f"/tmp/incr_qtl_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    )
-    if not os.path.exists(os.path.join(base_path, "_SUCCESS")):
-        hist("A").write.mode("overwrite").parquet(base_path)  # history
+    def build(d: str) -> None:  # history
+        hist("A").write.parquet(os.path.join(d, "hist"))
+
+    base = derived("incr_qtl", [table_path(sf_dir, "lineitem")], build)
     merged = (
-        spark.read.parquet(base_path)
+        spark.read.parquet(os.path.join(base, "hist"))
         .unionByName(hist("R"))  # the new increment
         .groupBy("bucket")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
@@ -1747,13 +1746,14 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join reads bucket-aligned files and shuffles zero bytes
     (plan-asserted in tests/test_scale_features.py). The merge hint
     forces the sort-merge path because at gate scale the planner would
-    broadcast these tiny tables and bypass the buckets being tested."""
-    import hashlib
-
+    broadcast these tiny tables and bypass the buckets being tested.
+    The bucketing spec lives in the session catalog, not in the files, so
+    both tables are written on every call, into a private directory whose
+    name they carry."""
     from ..operators import joins
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = f"/tmp/bucketed_{tag}"
+    base = run_dir("bucketed")
+    tag = os.path.basename(base)
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )

@@ -18,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import graph
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
+from ._scratch import derived
 
 
 def q_orders_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1271,42 +1272,23 @@ def q_table_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins v1 immutably. Branching writes ONE manifest — data parts are
     shared — and each ref's head proves isolation: main never sees the
     branch's rows, the branch never sees main's post-fork append, the
-    tag never moves. The fixture builds into a temp dir and renames
-    atomically (crash-safe); any divergent prior state rebuilds."""
-    import hashlib
-    import shutil
-
+    tag never moves."""
     from ..sources.snapshots import SnapshotTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    path = f"/tmp/branches_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
 
-    def _is_complete(p: str) -> bool:
-        t = SnapshotTable(p)
-        return (
-            t.latest_version() == 2
-            and t.branches() == ["exp"]
-            and SnapshotTable(p, ref="exp").latest_version() == 1
-            and os.path.exists(os.path.join(p, "tags", "prelaunch.json"))
-        )
-
-    import os
-
-    if os.path.exists(path) and not _is_complete(path):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(path):
-        build = path + ".build"
-        shutil.rmtree(build, ignore_errors=True)
-        t = SnapshotTable(build)
+    def build(d: str) -> None:
+        t = SnapshotTable(d)
         t.append(orders.where(F.col("o_orderkey") % 7 == 0).repartition(4))
         t.append(orders.where(F.col("o_orderkey") % 7 == 1).repartition(4))
         t.tag_version("prelaunch", 1)
         exp = t.create_branch("exp")
         exp.append(orders.where(F.col("o_orderkey") % 7 == 2).repartition(4))
         t.append(orders.where(F.col("o_orderkey") % 7 == 3).repartition(4))
-        os.rename(build, path)
+
+    path = derived("branches", [table_path(sf_dir, "orders")], build)
     t = SnapshotTable(path)
     exp = SnapshotTable(path, ref="exp")
     refs = [
@@ -1403,36 +1385,21 @@ def q_table_branch_promote(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge over the file-pruned snapshot_diff). Output proves both the
     promoted head (inserts landed, deletes applied) and that main's
     pre-promotion v0 still time-travels intact."""
-    import hashlib
-    import os
-    import shutil
-
     from ..sources.snapshots import SnapshotTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    path = f"/tmp/brpromote_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
 
-    def _is_complete(p: str) -> bool:
-        return (
-            SnapshotTable(p).latest_version() == 1
-            and SnapshotTable(p, ref="fix").latest_version() == 2
-        )
-
-    if os.path.exists(path) and not _is_complete(path):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(path):
-        build = path + ".build"
-        shutil.rmtree(build, ignore_errors=True)
-        t = SnapshotTable(build)
+    def build(d: str) -> None:
+        t = SnapshotTable(d)
         t.append(orders.where(F.col("o_orderkey") % 5 == 0).repartition(4))
         br = t.create_branch("fix")
         br.append(orders.where(F.col("o_orderkey") % 5 == 1).repartition(4))
         br.delete_where(spark, ["o_orderkey"], F.col("o_orderkey") % 25 == 0)
         t.promote_branch(spark, "fix", keys=["o_orderkey"])
-        os.rename(build, path)
-    t = SnapshotTable(path)
+
+    t = SnapshotTable(derived("brpromote", [table_path(sf_dir, "orders")], build))
     refs = [
         ("head", t.read(spark)),
         ("v0", t.read(spark, 0)),

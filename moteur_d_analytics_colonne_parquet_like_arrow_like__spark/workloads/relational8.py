@@ -14,13 +14,12 @@ anchors (they disagree).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
+from ._scratch import derived
 
 
 QUERIES: dict = {}
@@ -364,32 +363,23 @@ def q_table_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-pointing at v1's files — nothing is copied, deleted versions
     stay time-travelable — and the output proves it: all four versions
     read back with v3 exactly matching v1 while v2's delete remains
-    visible at v2. The fixture builds into a temp dir and renames
-    atomically (crash-safe); any divergent prior state rebuilds."""
+    visible at v2."""
     from ..sources.snapshots import SnapshotTable
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    path = f"/tmp/rollback_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
 
-    def _is_complete(p: str) -> bool:
-        return SnapshotTable(p).latest_version() == 3
-
-    if os.path.exists(path) and not _is_complete(path):
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(path):
-        build = path + ".build"
-        shutil.rmtree(build, ignore_errors=True)
-        t = SnapshotTable(build)
+    def build(d: str) -> None:
+        t = SnapshotTable(d)
         t.append(orders.where(F.col("o_orderkey") % 5 == 0).repartition(4))
         t.append(orders.where(F.col("o_orderkey") % 5 == 1).repartition(4))
         t.delete_where(
             spark, ["o_orderkey"], F.col("o_orderkey") % 10 == 6
         )
         t.rollback(1)
-        os.rename(build, path)
-    t = SnapshotTable(path)
+
+    t = SnapshotTable(derived("rollback", [table_path(sf_dir, "orders")], build))
     u = None
     for v in range(4):
         part = t.read(spark, v).select(
@@ -775,19 +765,12 @@ def q_multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFram
     require_real_codec=True (any unparseable blob raises on the
     executor). The oracle recomputes every aggregate from the
     generating formulas over range(0,120) without touching a file — a
-    lying parser or a mangled write fails the hash. Fixture builds into
-    a temp dir and renames atomically (crash-safe)."""
+    lying parser or a mangled write fails the hash. The files depend on
+    no input table, so one fixture serves every scale factor."""
     from ..operators import multimodal
 
-    n_files = 120
-    path = f"/tmp/media_files_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if os.path.exists(path) and len(os.listdir(path)) != n_files:
-        shutil.rmtree(path, ignore_errors=True)
-    if not os.path.exists(path):
-        build = path + f".build_{os.getpid()}"
-        shutil.rmtree(build, ignore_errors=True)
-        os.makedirs(build)
-        for mid in range(n_files):
+    def build(d: str) -> None:
+        for mid in range(120):
             if mid % 3 == 0:
                 blob = multimodal.bmp_bytes(
                     (mid % 31 + 1) * 4, (mid % 23 + 1) * 4
@@ -804,10 +787,10 @@ def q_multimodal_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFram
                     filler=mid % 200,
                 )
                 ext = "mp4"
-            with open(os.path.join(build, f"media_{mid}.{ext}"), "wb") as f:
+            with open(os.path.join(d, f"media_{mid}.{ext}"), "wb") as f:
                 f.write(blob)
-        os.rename(build, path)
-    raw = spark.read.format("binaryFile").load(path)
+
+    raw = spark.read.format("binaryFile").load(derived("media_files", [], build))
     kind = (
         F.when(F.col("path").endswith(".bmp"), "image")
         .when(F.col("path").endswith(".wav"), "audio")

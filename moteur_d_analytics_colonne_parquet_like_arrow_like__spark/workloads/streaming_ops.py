@@ -10,10 +10,13 @@ streaming operator surface.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import streaming as S
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, table_path
+from ._scratch import derived, run_dir
 
 
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -115,13 +118,8 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     each batch touches, keeping each user's latest event (last-writer-wins
     on ts, event_id). The oracle is the same merge in batch SQL — pins the
     sink pattern's end state, not just the transformations."""
-    import hashlib
-    import shutil
-    import os
-
-    path = f"/tmp/upsert_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if os.path.exists(path):
-        shutil.rmtree(path)  # fresh table per run: the merge must rebuild it
+    # fresh table per run: the merge must rebuild it
+    path = os.path.join(run_dir("upsert"), "table")
     stream = S.events_stream(spark, sf_dir).select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
@@ -295,6 +293,19 @@ ORACLES = {
 }
 
 
+def _events_8files(spark: SparkSession, sf_dir: str) -> str:
+    """The events table re-written as 8 files, one micro-batch each under
+    ``maxFilesPerTrigger=1``."""
+
+    def build(d: str) -> None:
+        load_table(spark, sf_dir, "events").repartition(8).write.parquet(
+            os.path.join(d, "events")
+        )
+
+    d = derived("events_8files", [table_path(sf_dir, "events")], build)
+    return os.path.join(d, "events")
+
+
 def q_stream_stateful_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """State ACROSS micro-batches: events re-written as 8 files (once per
     sf), streamed with maxFilesPerTrigger=1 so availableNow executes 8
@@ -304,18 +315,7 @@ def q_stream_stateful_multibatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     update-mode sink holds one row per (user, touched batch); the final
     state per user is the max-count row (the counter is monotone), and it
     must equal the batch GROUP BY over all events."""
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F
-
-    path = f"/tmp/events_8files_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        from ..sources.catalog import load_table
-
-        load_table(spark, sf_dir, "events").repartition(8).write.mode(
-            "overwrite"
-        ).parquet(path)
+    path = _events_8files(spark, sf_dir)
     batch_schema = spark.read.parquet(path).schema
     stream = (
         spark.readStream.schema(batch_schema)
@@ -433,18 +433,10 @@ def q_stream_col_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming aggregation. The oracle aggregates the original events
     table — encoder, stream reader, and micro-batch engine must all
     preserve every value for the hash to survive."""
-    import hashlib
-    import os
-
-    from pyspark.sql import functions as F
-
     from ..sources import colfile
-    from ..sources.catalog import load_table
     from ..sources.col_datasource import register_col_datasource
 
-    d = f"/tmp/col_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(d, "_DONE")):
-        os.makedirs(d, exist_ok=True)
+    def build(d: str) -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -459,8 +451,8 @@ def q_stream_col_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                 os.path.join(d, f"part_{i:03d}.col"),
                 rows_per_group=5_000,
             )
-        with open(os.path.join(d, "_DONE"), "w") as f:
-            f.write("ok")
+
+    d = derived("col_stream", [table_path(sf_dir, "events")], build)
     register_col_datasource(spark)
     sdf = spark.readStream.format("col").load(d)
     agg = sdf.groupBy("event_type").agg(
@@ -641,29 +633,10 @@ ORACLES["stream_windowed_topk"] = """
 """
 
 
-def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-user maintenance on a stream WITHOUT retaining keys:
-    8 real micro-batches (the multibatch fixture) each merge their
-    per-type KMV sketch into a persisted sketch table via foreachBatch
-    (streaming/foreach_batch_kmv_merge) — bounded types x 64-hash state.
-    Min-k distributivity makes the maintained sketch equal the batch-
-    built one, so the oracle recomputes sketch AND estimate straight
-    from the events table, batch-free; the exact distinct count rides
-    along so the estimator's error is visible in the gate output."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..sources.catalog import load_table
-
-    path8 = f"/tmp/events_8files_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if not os.path.exists(os.path.join(path8, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").repartition(8).write.mode(
-            "overwrite"
-        ).parquet(path8)
-    sk_path = f"/tmp/kmv_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    if os.path.exists(sk_path):
-        shutil.rmtree(sk_path)  # fresh maintenance run each time
+def _kmv_stream_sketch(spark: SparkSession, sf_dir: str, sk_path: str) -> DataFrame:
+    """Maintain the per-type KMV sketch over the 8 micro-batches of
+    ``_events_8files`` into ``sk_path`` and read it back."""
+    path8 = _events_8files(spark, sf_dir)
     batch_schema = spark.read.parquet(path8).schema
     stream = (
         spark.readStream.schema(batch_schema)
@@ -674,7 +647,20 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     S.foreach_batch_kmv_merge(
         stream, sk_path, ["event_type"], "user_id", k=64
     )
-    sk = spark.read.parquet(sk_path)
+    return spark.read.parquet(sk_path)
+
+
+def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct-user maintenance on a stream WITHOUT retaining keys:
+    8 real micro-batches (the multibatch fixture) each merge their
+    per-type KMV sketch into a persisted sketch table via foreachBatch
+    (streaming/foreach_batch_kmv_merge) — bounded types x 64-hash state.
+    Min-k distributivity makes the maintained sketch equal the batch-
+    built one, so the oracle recomputes sketch AND estimate straight
+    from the events table, batch-free; the exact distinct count rides
+    along so the estimator's error is visible in the gate output."""
+    # fresh maintenance run each time
+    sk = _kmv_stream_sketch(spark, sf_dir, os.path.join(run_dir("kmv_stream"), "sk"))
     summ = sk.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sk"),
         F.max("h").cast("bigint").alias("u_k"),

@@ -2,10 +2,6 @@
 corruption shrank stream_tumbling_window's output 21,388 → 25 rows and the
 bench reported it as a speedup). These tests need no SparkSession."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import bench
 
 

@@ -536,9 +536,6 @@ def test_bench_groupby_conf_bakes_single_reduce_partition(spark, sf_dir):
     3-group reduce the baseline contract assumes. A regression here
     (conf applied at exec time, AQE re-wrapping the plan) would silently
     re-widen the exchange."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
     import bench
 
     from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.workloads.parity import (

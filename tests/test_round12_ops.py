@@ -208,9 +208,6 @@ def test_bench_prepared_reps_rerun_full_lineage(spark):
     again on rep 2 — without the unregister step the DAGScheduler would
     serve the reduce from rep 1's map outputs and the scan would not
     re-run)."""
-    import sys as _sys
-
-    _sys.path.insert(0, "/root/repo")
     import bench
 
     acc = spark.sparkContext.accumulator(0)

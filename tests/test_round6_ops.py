@@ -11,9 +11,6 @@ bogus slots)."""
 
 from __future__ import annotations
 
-import hashlib
-import shutil
-
 import pytest
 from pyspark.sql import Row, functions as F
 
@@ -624,63 +621,3 @@ def test_vacuum_keeps_referenced_delete_files(spark, tmp_path):
     want = sorted(r["k"] for r in t.read(spark).collect())
     t.vacuum(keep_versions=1)
     assert sorted(r["k"] for r in t.read(spark).collect()) == want
-
-
-# ------------------------------------------- snapdiff fixture crash-safety
-
-
-def _snapdiff_path(sf_dir: str) -> str:
-    return f"/tmp/snapdiff_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-
-
-def test_snapdiff_fixture_self_heals_from_v0(spark, sf_dir):
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources.snapshots import (
-        SnapshotTable,
-    )
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.workloads import (
-        analytics,
-    )
-
-    path = _snapdiff_path(sf_dir)
-    want = sorted(
-        map(tuple, analytics.q_table_snapshot_diff(spark, sf_dir).collect())
-    )
-    # Simulate a crash between append and merge: v0-only partial state
-    # (with WRONG content, so silent reuse would be visible).
-    shutil.rmtree(path, ignore_errors=True)
-    t = SnapshotTable(path)
-    t.append(
-        spark.createDataFrame(
-            [(99999991, "F", 1.23)], "o_orderkey bigint, o_orderstatus string, price_r double"
-        )
-    )
-    assert t.latest_version() == 0
-    got = sorted(
-        map(tuple, analytics.q_table_snapshot_diff(spark, sf_dir).collect())
-    )
-    assert got == want
-    assert SnapshotTable(path).latest_version() == 1
-
-
-def test_snapdiff_fixture_raises_on_deep_corruption(spark, sf_dir):
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources.snapshots import (
-        SnapshotTable,
-    )
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.workloads import (
-        analytics,
-    )
-
-    path = _snapdiff_path(sf_dir)
-    shutil.rmtree(path, ignore_errors=True)
-    t = SnapshotTable(path)
-    one = spark.createDataFrame(
-        [(99999991, "F", 1.23)], "o_orderkey bigint, o_orderstatus string, price_r double"
-    )
-    t.append(one)
-    t.append(one)
-    t.append(one)
-    with pytest.raises(RuntimeError, match="unexpected version"):
-        analytics.q_table_snapshot_diff(spark, sf_dir)
-    # Restore the shared fixture for other tests / the gate.
-    shutil.rmtree(path, ignore_errors=True)
-    analytics.q_table_snapshot_diff(spark, sf_dir).limit(1).collect()

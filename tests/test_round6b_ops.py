@@ -290,22 +290,16 @@ def test_pq_recall_floor_on_testdata(spark, sf_dir):
 # --------------------------------------------------- streaming KMV merge
 
 
-def test_stream_kmv_equals_batch_built_sketch(spark, sf_dir):
+def test_stream_kmv_equals_batch_built_sketch(spark, sf_dir, tmp_path):
     # Min-k distributivity, end to end: the sketch maintained across 8
     # real micro-batches must EQUAL the sketch built over all events at
     # once — same hashes, same ranks, any batch split.
-    import hashlib
-
     from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.operators import sketches
     from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources.catalog import load_table
     from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.workloads import streaming_ops
 
-    streaming_ops.q_stream_kmv_distinct(spark, sf_dir).collect()
-    sk_path = (
-        f"/tmp/kmv_stream_{hashlib.md5(sf_dir.encode()).hexdigest()[:10]}"
-    )
     maintained = (
-        spark.read.parquet(sk_path)
+        streaming_ops._kmv_stream_sketch(spark, sf_dir, str(tmp_path / "sk"))
         .select("event_type", "h", "rn")
         .orderBy("event_type", "rn")
         .collect()

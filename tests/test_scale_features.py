@@ -360,3 +360,26 @@ def test_aqe_splits_skewed_join(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_local_driver_memory_follows_host_limits(tmp_path):
+    # Sizing reads files only; no JVM starts here.
+    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.session import (
+        local_driver_memory,
+    )
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16479424 kB\nMemFree:  1 kB\n")
+    cg_max = tmp_path / "memory.max"
+    gib = 2**30
+
+    def size(limit=None):
+        cg_max.write_text(limit if limit is not None else "max\n")
+        return local_driver_memory(str(meminfo), (str(cg_max), str(tmp_path / "absent")))
+
+    assert size() == "9g"  # 60% of a 15.7 GiB host, unlimited cgroup
+    assert size(f"{4 * gib}\n") == "2g"  # the cgroup limit is smaller
+    assert size(f"{gib}\n") == "1g"  # never below 1g
+    meminfo.write_text(f"MemTotal: {512 * gib // 1024} kB\n")
+    assert size() == "48g"  # capped
+    assert local_driver_memory(str(tmp_path / "none"), ()) == "48g"

@@ -22,13 +22,14 @@ two checks that would have caught every round-1/2 driver hash failure.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from moteur_d_analytics_colonne_parquet_like_arrow_like__spark import get_spark
 from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources.catalog import (

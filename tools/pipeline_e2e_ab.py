@@ -4,13 +4,15 @@ branches (ReusedExchange is zero across branches; measured r10), blanket
 persist was A/B-REFUTED (wall -13% but input +92% / shuffle +118%), and
 the documented alternative — explicit parquet materialization at stage
 boundaries — existed only as prose. This tool makes it a measured code
-path: the THREE configurations of ``e2e_stage_frames`` run at sf0.1 and
+path: the configurations of ``e2e_stage_frames`` run at sf0.1 and
 sf1 (production cap 64), recording wall, input bytes, shuffle bytes,
-spill, and the number of distinct corpus scans.
+spill, and the number of distinct corpus scans. The blanket-persist arm
+was removed after it lost; its r10/r11 numbers stay in
+pipeline_e2e_ab.json.
 
   lazy        — status quo: ONE lazy plan, re-derived lineage per branch
-  persist     — blanket .persist() of every stage frame (the refuted arm)
   materialize — each stage written to parquet and re-read (the knob)
+  auto        — ``auto_materialize`` picks one of the two
 
 The advised bucket cap is also computed per corpus and checked against
 the production cap (the r10 rule, asserted — cap >= advised).
@@ -52,7 +54,6 @@ def _run(spark, sf_dir: str, mode: str) -> tuple[float, dict]:
         materialize_dir=(
             MAT_DIR if mode in ("materialize", "auto") else None
         ),
-        persist_stages=(mode == "persist"),
         materialize="auto" if mode == "auto" else "explicit",
     )
     frames["s5"].write.format("noop").mode("overwrite").save()
@@ -85,7 +86,7 @@ def measure(spark, sf_dir: str, label: str) -> dict:
     # .auto_materialize; the confirmation check is that its wall matches
     # the WINNING explicit arm at each SF (picked materialize at the
     # 17 MB corpus, lazy at the 525 MB one).
-    for mode in ("lazy", "persist", "materialize", "auto"):
+    for mode in ("lazy", "materialize", "auto"):
         walls, bts = [], None
         _run(spark, sf_dir, mode)  # warmup
         for _ in range(3):

@@ -341,19 +341,11 @@ REPLICATION = {
 
 def build_sf1(spark) -> None:
     # v4: embeddings joined REPLICATION (r13) — a marker bump rebuilds
-    # the whole fixture once. v4 also invalidates the /tmp ANN layout
-    # caches derived from the OLD fixed-size sf1 embeddings (ivf_layout_*
-    # / ivfsq_*, keyed on md5(sf_dir) so their content would silently go
-    # stale against the replicated corpus).
+    # the whole fixture once. The gates' derived layouts are keyed on
+    # their input files, so they rebuild against the new tables.
     marker = os.path.join(DST, "_DONE_v4")
     if os.path.exists(marker):
         return
-    import hashlib
-    import shutil
-
-    tag = hashlib.md5(DST.encode()).hexdigest()[:10]
-    for prefix in ("ivf_layout", "ivfsq"):
-        shutil.rmtree(f"/tmp/{prefix}_{tag}", ignore_errors=True)
     src = SRC if os.path.exists(SRC) else RAW
     for table, (shifts, text_col) in REPLICATION.items():
         df = spark.read.parquet(os.path.join(src, f"{table}.parquet"))
