@@ -745,6 +745,115 @@ def _star_fixpoint(edges: DataFrame, max_iterations: int) -> DataFrame:
     return edges
 
 
+#: Driver memory one edge costs on the union-find path of the components
+#: entry points, measured on 1M random int64 edges on a 4-core x86 host:
+#: Python peak (tracemalloc over the fetched Arrow columns, the parent dict
+#: and the node/label lists) 240 B at two nodes per edge, the worst case;
+#: JVM heap held by the result's local relation (used-heap delta after
+#: System.gc()) 86 B at 1.25 nodes per edge, so ~140 B at two. Rounded up.
+#: At that size the path took 9-12 s against 28-34 s for the propagation
+#: fixpoint on the same edges.
+_UNION_FIND_EDGE_BYTES = 400
+
+
+def _union_find_cap(spark) -> int:
+    """Most edges the components entry points resolve on the driver: a
+    tenth of the session's ``spark.driver.memory`` (the heap
+    ``session.local_driver_memory`` sizes from the host, or whatever a
+    cluster deployment set) over :data:`_UNION_FIND_EDGE_BYTES`. 9g gives
+    ~2.4M edges; Spark's 1g default ~270k."""
+    mem = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+    mib = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsMb(mem)
+    return mib * 2**20 // 10 // _UNION_FIND_EDGE_BYTES
+
+
+def _union_find(us: list, vs: list) -> tuple[list, list]:
+    """Connected components of the edges ``(us[i], vs[i])``: every endpoint
+    and the minimum id of its component. Path compression, and the larger
+    root always hangs under the smaller, so every root is its component's
+    minimum."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while (up := parent[root]) != root:
+            root = up
+        while (up := parent[x]) != root:
+            parent[x] = root
+            x = up
+        return root
+
+    for u, v in zip(us, vs):
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru < rv:
+            parent[rv] = ru
+        elif rv < ru:
+            parent[ru] = rv
+    nodes = list(parent)
+    return nodes, [find(x) for x in nodes]
+
+
+def _components_small(
+    edges: DataFrame, entry: str
+) -> tuple[DataFrame, DataFrame | None]:
+    """Shared front of the components entry points. Runs the ``(u, v)``
+    edge plan once into a ``localCheckpoint``, counts it, and fetches it
+    through Arrow only when the count is within the cap
+    (:func:`_union_find_cap`). A graph within the cap, with no null
+    endpoint and integer or binary-collated string ids (whose Python order
+    is Spark's) is resolved by :func:`_union_find` on the driver: three
+    jobs (checkpoint, count, fetch) instead of a fixpoint whose per-job
+    overhead dwarfs a near-dup graph's work (on ``corpus_curation``'s
+    83-edge graphs the op went from 61 jobs to 28). Returns
+    ``(checkpoint, labels)``; ``labels`` is None when the caller's
+    fixpoint must run on the checkpoint.
+
+    The result is built from an Arrow table, which becomes a JVM-side local
+    relation; a Python list would become a Python RDD and start Python
+    workers for every downstream job."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    spark = edges.sparkSession
+    edges = edges.localCheckpoint(eager=True)
+    # the type both fixpoints give their labels: the union-widened id type
+    id_type = edges.union(edges.select("v", "u")).schema["u"].dataType
+    cap = _union_find_cap(spark)
+    if not (isinstance(id_type, T.IntegralType) or id_type == T.StringType()):
+        logger.info("%s: fixpoint path, %s ids, cap %d", entry, id_type, cap)
+        return edges, None
+    # counting the materialized checkpoint is a scan; fetching with a limit
+    # would shuffle every partition's head into one above the cap
+    n = edges.count()
+    fetched = edges.toArrow() if n <= cap else None
+    small = fetched is not None and not (
+        fetched.column("u").null_count or fetched.column("v").null_count
+    )
+    logger.info(
+        "%s: %s path, %d edges, cap %d",
+        entry,
+        "union-find" if small else "fixpoint",
+        n,
+        cap,
+    )
+    if not small:
+        return edges, None
+    nodes, labels = _union_find(
+        fetched.column("u").to_pylist(), fetched.column("v").to_pylist()
+    )
+    arrow_type = to_arrow_type(id_type)
+    table = pa.table(
+        {"node": pa.array(nodes, arrow_type), "label": pa.array(labels, arrow_type)}
+    )
+    schema = T.StructType(
+        [T.StructField("node", id_type), T.StructField("label", id_type)]
+    )
+    return edges, spark.createDataFrame(table, schema)
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -752,34 +861,38 @@ def duplicate_clusters(
     max_iterations: int = 50,
 ) -> DataFrame:
     """Resolve near-dup pairs into duplicate clusters: connected components
-    by iterative min-label propagation. Returns (node, label) where label =
-    smallest doc id in the component — the canonical "keeper".
+    of the pair graph. Returns (node, label) for every id in ``pairs``,
+    self-pair-only ids included, where label = smallest doc id in the
+    component — the canonical "keeper".
 
-    Each iteration is one join + groupBy (shuffles on node id);
-    ``localCheckpoint`` cuts lineage so plans stay flat. Converges in
-    graph-diameter iterations — near-dup graphs are shallow (dup clusters
-    are cliques or short chains), so typically 2-3 rounds.
+    Graphs within the driver-memory cap are resolved by union-find on the
+    driver (``_components_small``). Above the cap, with a null endpoint or
+    with ids other than integers and strings, runs iterative min-label
+    propagation: each iteration is one join + groupBy
+    (shuffles on node id); ``localCheckpoint`` cuts lineage so plans stay
+    flat. It converges in graph-diameter iterations and stops after
+    ``max_iterations``, so a chain longer than that gets wrong labels there;
+    union-find always returns the true components, as the recursive-CTE
+    oracle does.
 
-    r14 measurement note (VERDICT r13 item 6 asked for star-contraction
-    here; the order's own fallback — a written ceiling disposition — is
-    what the measurements support): an interleaved same-session A/B of
-    this loop vs the ``duplicate_clusters_star`` engine on the identical
-    clique-heavy v4 corpus measured propagation FASTER at gate level
-    (2.86 vs 3.31 s sf0.1 medians over 5 steady reps) and the isolated
-    fixpoints comparable at sf1 (3.7 vs 4.9 s medians on pre-checkpointed
-    edges, host-noise band 2.3-14 s). On clique/short-chain components
-    BOTH algorithms converge in ~2 rounds, and a propagation round is one
-    join + one groupBy where a star alternation is two groupBys + two
-    joins + two distincts — so the r13 rehearsal's 2× star advantage
-    (22.4 vs 11.6 s, separate runs) was cross-run pairs-DAG scatter, not
-    algorithm. Star contraction genuinely wins when component DIAMETER
-    exceeds the round budget (long chains); that path is
-    ``duplicate_clusters_star``, same fixpoint, pinned identical in
-    tests/test_r14_opt.py.
+    Propagation versus star contraction (``duplicate_clusters_star``) now
+    matters only above the cap. The r14 interleaved A/B measured
+    propagation faster on the clique-heavy gate corpus (2.86 vs 3.31 s
+    sf0.1 medians) and comparable at sf1 (3.7 vs 4.9 s on pre-checkpointed
+    edges): on clique/short-chain components both converge in ~2 rounds,
+    and a propagation round is one join + one groupBy where a star
+    alternation is two of each. Star wins when component diameter exceeds
+    the round budget (long chains).
     """
+    edges, small = _components_small(
+        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")),
+        "duplicate_clusters",
+    )
+    if small is not None:
+        return small
     edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .union(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -817,21 +930,27 @@ def duplicate_clusters_star(
     id_b: str = "id_b",
     max_iterations: int = 50,
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star (Kiveris
-    et al., SoCC'14) — the billion-edge path, O(log² n) rounds with
-    intermediate edge sets that stay star-shaped instead of growing with
-    graph diameter — the variant to use when dup chains are long or
-    components are huge. Same fixpoint as ``duplicate_clusters``
-    (identity-pinned in tests/test_r14_opt.py); nodes = endpoints of the
-    self-loop-free edge set. r14: the per-round convergence check dropped
-    from two ``exceptAll`` jobs to one tagged-union aggregation
-    (``_star_fixpoint``)."""
-    edges = (
+    """Connected components of the self-loop-free pair graph: (node, label)
+    for every endpoint of a ``u != v`` pair, label = the component's min
+    id. Self-pair-only ids are not listed (``duplicate_clusters`` lists
+    them).
+
+    Within the driver-memory cap, union-find on the driver
+    (``_components_small``), shared with ``duplicate_clusters``. Above it,
+    alternating large-star/small-star (Kiveris et al., SoCC'14) — the
+    billion-edge path, O(log² n) rounds with intermediate edge sets that
+    stay star-shaped instead of growing with graph diameter — the variant
+    to use above the cap when dup chains are long or components are huge.
+    Identity-pinned against propagation and against the union-find path in
+    tests/test_r14_opt.py."""
+    edges, small = _components_small(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "duplicate_clusters_star",
     )
+    if small is not None:
+        return small
     all_nodes = (
         edges.select("u").union(edges.select(F.col("v").alias("u"))).distinct()
     )

@@ -682,11 +682,15 @@ def ivf_sq_topk(
     ).first()
     fp_now = (fp_now_row["n"], fp_now_row["max_id"], fp_now_row["content"])
     fp_old = None
-    try:
-        r = spark.read.parquet(fp_path).first()
-        fp_old = (r["n"], r["max_id"], r["content"])
-    except Exception:
-        fp_old = None
+    # Ask the path's Hadoop FileSystem first: reading a fingerprint that was
+    # never written fails analysis and prints a FileNotFoundException trace.
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(fp_path)
+    if jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        try:
+            r = spark.read.parquet(fp_path).first()
+            fp_old = (r["n"], r["max_id"], r["content"])
+        except Exception:
+            fp_old = None
     if fp_old != fp_now:
         stats = sq_int8_stats(corpus, vec_col, dim)
         coded = sq_int8_quantize(corpus, vec_col, stats, "qvec_i8")

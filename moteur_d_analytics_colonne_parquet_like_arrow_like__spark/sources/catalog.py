@@ -183,9 +183,13 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
 
 # Session-level table-handle cache: re-resolving a path (file listing +
 # footer schema read + analysis) costs ~100 ms per call, which a real
-# deployment amortizes through its metastore. Keyed by session so a stopped
-# session's handles are never reused.
-_TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+# deployment amortizes through its metastore. One entry per (session,
+# sf_dir, name), holding the handle and the ``files_key`` it was resolved
+# from: a handle keeps its file listing, so a table rewritten in place
+# (a 10-row file rewritten as 20,000 rows read back 3,000) replaces the
+# entry instead of being read through the stale listing. Keyed by session
+# so a stopped session's handles are never reused.
+_TABLE_CACHE: dict[tuple[int, str, str], tuple[tuple, DataFrame]] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -197,9 +201,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # on cache hits: rendering picks up the conf at EXECUTION time.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = (id(spark), sf_dir, name)
+    stamp = files_key(table_path(sf_dir, name))
     cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[0] == stamp:
+        return cached[1]
     if name == "events":
         # Probe the footer for the encoding the testdata ACTUALLY ships —
         # it has changed between rounds (NANOS → MICROS) and hard-coding a
@@ -215,7 +220,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(table_path(sf_dir, name))
     if name == "events":
         df = _normalize_events_ts(df)
-    _TABLE_CACHE[key] = df
+    _TABLE_CACHE[key] = (stamp, df)
     return df
 
 

@@ -239,8 +239,9 @@ def q_text_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs resolved to duplicate clusters (connected components,
-    iterative min-label propagation)."""
+    """Near-dup pairs resolved to duplicate clusters (connected components:
+    union-find on the driver within its memory cap, iterative min-label
+    propagation above it)."""
     pairs = dedup.ngram_jaccard_pairs(
         _documents(spark, sf_dir), "doc_id", "text", shingle_k=3, threshold=0.8
     )
@@ -286,9 +287,10 @@ def q_pipeline_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clusters via alternating large-star/small-star — the
-    O(log² n)-round billion-edge variant; fixpoint identical to min-label
-    propagation, so it shares the recursive-CTE oracle."""
+    """Same clusters via alternating large-star/small-star above the
+    driver-memory cap (union-find within it) — the O(log² n)-round
+    billion-edge variant; fixpoint identical to min-label propagation, so
+    it shares the recursive-CTE oracle."""
     pairs = dedup.ngram_jaccard_pairs(
         _documents(spark, sf_dir), "doc_id", "text", shingle_k=3, threshold=0.8
     )

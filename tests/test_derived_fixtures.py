@@ -153,8 +153,24 @@ def test_gate_fixture_rebuilds_after_input_rewrite(spark, sf_dir, tmp_path, scra
     path = catalog.table_path(sf, "supplier")
     supplier = pq.read_table(path)
     pq.write_table(supplier.slice(0, supplier.num_rows // 2), path)
-    # Table handles are cached per (session, sf_dir, name); drop this copy's.
-    for key in [k for k in catalog._TABLE_CACHE if k[1] == sf]:
-        del catalog._TABLE_CACHE[key]
     check()
     assert len([n for n in os.listdir(scratch_root) if n.startswith("col_native_")]) == 2
+
+
+def test_load_table_rereads_table_rewritten_in_place(spark, sf_dir, tmp_path):
+    # A cached table handle keeps its file listing: a 10-row table
+    # rewritten as 20,000 rows (row groups of 1,000) at the same path read
+    # back 3,000 rows through a handle cached on (session, sf_dir, name).
+    import shutil
+
+    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources import catalog
+
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
+    path = catalog.table_path(sf, "supplier")
+    shutil.copyfile(catalog.table_path(sf_dir, "supplier"), path)
+    small = pq.read_table(path)
+    assert catalog.load_table(spark, sf, "supplier").count() == small.num_rows
+    big = pa.concat_tables([small] * (20_000 // small.num_rows))
+    pq.write_table(big, path, row_group_size=1_000)
+    assert catalog.load_table(spark, sf, "supplier").count() == big.num_rows

@@ -115,23 +115,122 @@ def test_agg_approx_sketches_split_distinct_identity(spark, sf_dir):
     assert [tuple(r) for r in new.collect()] == [tuple(r) for r in old.collect()]
 
 
-def test_duplicate_clusters_star_contraction_identity(spark):
-    """The star-contraction duplicate_clusters must reproduce the
-    propagation reference's (node, label) rows EXACTLY on adversarial
-    graph shapes — chains, cliques, self-pairs, hubs, multi-component."""
-    for name, edges in _GRAPHS.items():
+def _bfs_components(edges):
+    """Pure-Python reference: (node, min id of its component) rows over
+    every endpoint of ``edges``, by breadth-first search, in ``_rows``
+    order."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label = {}
+    for start in sorted(adj):
+        if start in label:
+            continue
+        seen, frontier = {start}, [start]
+        while frontier:
+            frontier = [n for x in frontier for n in adj[x] if n not in seen]
+            seen.update(frontier)
+        label.update({n: start for n in seen})
+    return sorted(label.items(), key=repr)
+
+
+def _rows(df):
+    # repr orders rows holding a null node too
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _fixpoint_rows(fn, pairs, monkeypatch):
+    """``fn``'s rows with the union-find cap at 0, so its fixpoint runs."""
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_union_find_cap", lambda spark: 0)
+        return _rows(fn(pairs))
+
+
+def _paths(caplog):
+    """``"<entry>: <path>"`` of every components log line captured."""
+    msgs = [r.getMessage() for r in caplog.records]
+    return [m.split(" path")[0] for m in msgs if " path" in m]
+
+
+def test_duplicate_clusters_star_contraction_identity(spark, monkeypatch, caplog):
+    """Both entry points must reproduce their fixpoints' (node, label) rows
+    EXACTLY through the union-find path on adversarial graph shapes —
+    chains, cliques, self-pairs, hubs, multi-component — and on random
+    200-edge graphs; ``duplicate_clusters`` also equals the propagation
+    reference (self-pair-only nodes listed), ``duplicate_clusters_star``
+    the BFS components of the self-loop-free edges."""
+    import random
+
+    graphs = dict(_GRAPHS)
+    for seed in (1, 2):
+        rng = random.Random(seed)
+        graphs[f"random{seed}"] = [
+            (rng.randrange(120), rng.randrange(120)) for _ in range(200)
+        ]
+    caplog.set_level("INFO", logger=dedup.__name__)
+    for name, edges in graphs.items():
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        ref = sorted(
-            tuple(r) for r in _propagation_reference(pairs).collect()
-        )
-        new = sorted(
-            tuple(r) for r in dedup.duplicate_clusters(pairs).collect()
-        )
+        caplog.clear()
+        new = _rows(dedup.duplicate_clusters(pairs))
+        star = _rows(dedup.duplicate_clusters_star(pairs))
+        assert _paths(caplog) == [
+            "duplicate_clusters: union-find",
+            "duplicate_clusters_star: union-find",
+        ], name
+        ref = _rows(_propagation_reference(pairs))
         assert new == ref, f"graph {name}: {new} != {ref}"
-        # the star entry point shares the fixpoint on self-loop-free graphs
-        if all(a != b for a, b in edges):
-            star = sorted(
-                tuple(r)
-                for r in dedup.duplicate_clusters_star(pairs).collect()
-            )
-            assert star == ref, f"graph {name} (star): {star} != {ref}"
+        assert new == _fixpoint_rows(dedup.duplicate_clusters, pairs, monkeypatch)
+        loop_free = [(a, b) for a, b in edges if a != b]
+        assert star == _bfs_components(loop_free), name
+        assert star == _fixpoint_rows(dedup.duplicate_clusters_star, pairs, monkeypatch)
+
+
+def test_duplicate_clusters_null_endpoint_takes_fixpoint(spark, monkeypatch, caplog):
+    """A null endpoint sends ``duplicate_clusters`` to its fixpoint, which
+    lists the null node; the star entry drops null pairs with its
+    ``u != v`` filter, so it stays on union-find. Both keep their rows."""
+    edges = [(1, None), (2, 3), (3, 1), (None, 5), (5, 6)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    caplog.set_level("INFO", logger=dedup.__name__)
+    new = _rows(dedup.duplicate_clusters(pairs))
+    star = _rows(dedup.duplicate_clusters_star(pairs))
+    assert _paths(caplog) == [
+        "duplicate_clusters: fixpoint",
+        "duplicate_clusters_star: union-find",
+    ]
+    assert new == _rows(_propagation_reference(pairs))
+    assert (None, 1) in new
+    assert star == _fixpoint_rows(dedup.duplicate_clusters_star, pairs, monkeypatch)
+    assert star == _bfs_components([(2, 3), (3, 1), (5, 6)])
+
+
+def test_duplicate_clusters_chain_past_iteration_budget(spark):
+    """A 60-node chain is longer than the fixpoints' 50-round budget;
+    union-find returns its true component, as the BFS reference does."""
+    edges = [(i, i + 1) for i in range(59)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    want = _bfs_components(edges)
+    assert set(want) == {(i, 0) for i in range(60)}
+    assert _rows(dedup.duplicate_clusters(pairs)) == want
+    assert _rows(dedup.duplicate_clusters_star(pairs)) == want
+
+
+def test_duplicate_clusters_cap_straddle(spark, monkeypatch, caplog):
+    """The same input on either side of the cap: one edge under it runs
+    the fixpoint, at it union-find, and both give the same rows."""
+    edges = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)] + [
+        (i, i + 1) for i in range(10, 16)
+    ]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    caplog.set_level("INFO", logger=dedup.__name__)
+    for fn in (dedup.duplicate_clusters, dedup.duplicate_clusters_star):
+        got = {}
+        for cap in (len(edges) - 1, len(edges)):
+            monkeypatch.setattr(dedup, "_union_find_cap", lambda spark, c=cap: c)
+            caplog.clear()
+            got[cap] = _rows(fn(pairs))
+            path = "fixpoint" if cap < len(edges) else "union-find"
+            assert _paths(caplog) == [f"{fn.__name__}: {path}"]
+        assert got[len(edges) - 1] == got[len(edges)]
+        assert got[len(edges)] == _bfs_components(edges)

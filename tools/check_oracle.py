@@ -9,7 +9,9 @@ Usage: python tools/check_oracle.py [--bare] [--types-only] [sf_dir] [query_name
 
 ``--bare`` runs on a SparkSession built with NO repo confs (mirroring the
 driver, which uses its own session) — round 1 proved that factory-only confs
-hide real failures, so prefer --bare for pre-round validation.
+hide real failures, so prefer --bare for pre-round validation. Only its
+core count follows ``get_spark`` (``SPARK_GRAFT_CPUS``), so gate timings
+compare with factory-session runs.
 
 ``--types-only`` skips Spark entirely and only audits every oracle's DuckDB
 output types, failing on any HUGEINT/UHUGEINT/DECIMAL column — the round-2
@@ -177,8 +179,10 @@ def main() -> int:
     if bare:
         from pyspark.sql import SparkSession
 
+        from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.session import _cpus
+
         spark = (
-            SparkSession.builder.master("local[8]")
+            SparkSession.builder.master(f"local[{_cpus()}]")
             .appName("check_oracle_bare")
             .getOrCreate()
         )
