@@ -715,11 +715,19 @@ def _star(e: DataFrame, large: bool) -> DataFrame:
     return out.where(F.col("u") != F.col("v")).distinct()
 
 
-def _star_fixpoint(edges: DataFrame, max_iterations: int) -> DataFrame:
+#: Most large-star/small-star alternations :func:`_star_fixpoint` runs. The
+#: fixpoint takes O(log² n) rounds (Kiveris et al.), a handful on near-dup
+#: graphs; running out of them raises instead of returning labels that are
+#: not yet components.
+_STAR_ROUNDS = 50
+
+
+def _star_fixpoint(edges: DataFrame) -> DataFrame:
     """Alternate (large-star, small-star) until the edge set is stable.
     Input: distinct (u, v) edges with u != v, lineage already cut.
     Output: the converged star edges — every node of a non-singleton
-    component points at the component's min id.
+    component but its min id points at that min id. Raises
+    ``RuntimeError`` when :data:`_STAR_ROUNDS` rounds do not converge.
 
     Convergence check (r14, guide §1.2): ONE aggregation job instead of
     the old pair of ``exceptAll`` counts — the two sides are distinct
@@ -727,7 +735,7 @@ def _star_fixpoint(edges: DataFrame, max_iterations: int) -> DataFrame:
     the symmetric difference is non-empty; ``limit(1)`` short-circuits
     row retrieval. Halves the per-round check cost and drops one
     job/stage barrier per round."""
-    for _ in range(max_iterations):
+    for _ in range(_STAR_ROUNDS):
         new_edges = _star(_star(edges, large=True), large=False).localCheckpoint(
             eager=True
         )
@@ -738,26 +746,27 @@ def _star_fixpoint(edges: DataFrame, max_iterations: int) -> DataFrame:
             .where(F.col("count") == 1)
             .limit(1)
         )
-        converged = diff.count() == 0
+        if diff.count() == 0:
+            return new_edges
         edges = new_edges
-        if converged:
-            break
-    return edges
+    raise RuntimeError(
+        f"large-star/small-star did not converge in {_STAR_ROUNDS} rounds"
+    )
 
 
-#: Driver memory one edge costs on the union-find path of the components
-#: entry points, measured on 1M random int64 edges on a 4-core x86 host:
-#: Python peak (tracemalloc over the fetched Arrow columns, the parent dict
-#: and the node/label lists) 240 B at two nodes per edge, the worst case;
-#: JVM heap held by the result's local relation (used-heap delta after
-#: System.gc()) 86 B at 1.25 nodes per edge, so ~140 B at two. Rounded up.
-#: At that size the path took 9-12 s against 28-34 s for the propagation
-#: fixpoint on the same edges.
+#: Driver memory one edge costs on the union-find path of
+#: :func:`duplicate_clusters`, measured on 1M random int64 edges on a 4-core
+#: x86 host: Python peak (tracemalloc over the fetched Arrow columns, the
+#: parent dict and the node/label lists) 240 B at two nodes per edge, the
+#: worst case; JVM heap held by the result's local relation (used-heap
+#: delta after System.gc()) 86 B at 1.25 nodes per edge, so ~140 B at two.
+#: Rounded up. At that size the path took 9-12 s against 28-34 s for the
+#: propagation fixpoint on the same edges.
 _UNION_FIND_EDGE_BYTES = 400
 
 
 def _union_find_cap(spark) -> int:
-    """Most edges the components entry points resolve on the driver: a
+    """Most edges :func:`duplicate_clusters` resolves on the driver: a
     tenth of the session's ``spark.driver.memory`` (the heap
     ``session.local_driver_memory`` sizes from the host, or whatever a
     cluster deployment set) over :data:`_UNION_FIND_EDGE_BYTES`. 9g gives
@@ -795,171 +804,107 @@ def _union_find(us: list, vs: list) -> tuple[list, list]:
     return nodes, [find(x) for x in nodes]
 
 
-def _components_small(
-    edges: DataFrame, entry: str
-) -> tuple[DataFrame, DataFrame | None]:
-    """Shared front of the components entry points. Runs the ``(u, v)``
-    edge plan once into a ``localCheckpoint``, counts it, and fetches it
-    through Arrow only when the count is within the cap
-    (:func:`_union_find_cap`). A graph within the cap, with no null
-    endpoint and integer or binary-collated string ids (whose Python order
-    is Spark's) is resolved by :func:`_union_find` on the driver: three
-    jobs (checkpoint, count, fetch) instead of a fixpoint whose per-job
-    overhead dwarfs a near-dup graph's work (on ``corpus_curation``'s
-    83-edge graphs the op went from 61 jobs to 28). Returns
-    ``(checkpoint, labels)``; ``labels`` is None when the caller's
-    fixpoint must run on the checkpoint.
-
-    The result is built from an Arrow table, which becomes a JVM-side local
-    relation; a Python list would become a Python RDD and start Python
-    workers for every downstream job."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    spark = edges.sparkSession
-    edges = edges.localCheckpoint(eager=True)
-    # the type both fixpoints give their labels: the union-widened id type
-    id_type = edges.union(edges.select("v", "u")).schema["u"].dataType
-    cap = _union_find_cap(spark)
-    if not (isinstance(id_type, T.IntegralType) or id_type == T.StringType()):
-        logger.info("%s: fixpoint path, %s ids, cap %d", entry, id_type, cap)
-        return edges, None
-    # counting the materialized checkpoint is a scan; fetching with a limit
-    # would shuffle every partition's head into one above the cap
-    n = edges.count()
-    fetched = edges.toArrow() if n <= cap else None
-    small = fetched is not None and not (
-        fetched.column("u").null_count or fetched.column("v").null_count
+def _null_row(edges: DataFrame, labels: DataFrame) -> DataFrame:
+    """The null id's row of :func:`duplicate_clusters`, as min-label
+    propagation gives it: none when no ``(u, v)`` edge has a null end,
+    else one, labelled with the least label among the null id's non-null
+    neighbours (null when it has none)."""
+    nbrs = (
+        edges.where(F.col("u").isNull())
+        .select(F.col("v").alias("node"))
+        .union(edges.where(F.col("v").isNull()).select(F.col("u").alias("node")))
     )
-    logger.info(
-        "%s: %s path, %d edges, cap %d",
-        entry,
-        "union-find" if small else "fixpoint",
-        n,
-        cap,
+    null = F.lit(None).cast(labels.schema["node"].dataType).alias("node")
+    return (
+        nbrs.join(labels, "node", "left")
+        .groupBy(null)
+        .agg(F.min("label").alias("label"))
     )
-    if not small:
-        return edges, None
-    nodes, labels = _union_find(
-        fetched.column("u").to_pylist(), fetched.column("v").to_pylist()
-    )
-    arrow_type = to_arrow_type(id_type)
-    table = pa.table(
-        {"node": pa.array(nodes, arrow_type), "label": pa.array(labels, arrow_type)}
-    )
-    schema = T.StructType(
-        [T.StructField("node", id_type), T.StructField("label", id_type)]
-    )
-    return edges, spark.createDataFrame(table, schema)
 
 
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iterations: int = 50,
 ) -> DataFrame:
     """Resolve near-dup pairs into duplicate clusters: connected components
     of the pair graph. Returns (node, label) for every id in ``pairs``,
     self-pair-only ids included, where label = smallest doc id in the
-    component — the canonical "keeper".
+    component — the canonical "keeper". A null id joins no two
+    components; it is listed once, with the least label among its non-null
+    neighbours.
 
-    Graphs within the driver-memory cap are resolved by union-find on the
-    driver (``_components_small``). Above the cap, with a null endpoint or
-    with ids other than integers and strings, runs iterative min-label
-    propagation: each iteration is one join + groupBy
-    (shuffles on node id); ``localCheckpoint`` cuts lineage so plans stay
-    flat. It converges in graph-diameter iterations and stops after
-    ``max_iterations``, so a chain longer than that gets wrong labels there;
-    union-find always returns the true components, as the recursive-CTE
-    oracle does.
+    The pair plan runs once into a ``localCheckpoint``, which is counted.
+    A graph within the cap (:func:`_union_find_cap`) with integer or
+    binary-collated string ids (whose Python order is Spark's) is fetched
+    through Arrow and resolved by :func:`_union_find` on the driver: three
+    jobs (checkpoint, count, fetch) instead of a fixpoint whose per-job
+    overhead dwarfs a near-dup graph's work (on ``corpus_curation``'s
+    83-edge graphs the op went from 61 jobs to 28). The result is built
+    from an Arrow table, which becomes a JVM-side local relation; a Python
+    list would become a Python RDD and start Python workers for every
+    downstream job.
 
-    Propagation versus star contraction (``duplicate_clusters_star``) now
-    matters only above the cap. The r14 interleaved A/B measured
-    propagation faster on the clique-heavy gate corpus (2.86 vs 3.31 s
-    sf0.1 medians) and comparable at sf1 (3.7 vs 4.9 s on pre-checkpointed
-    edges): on clique/short-chain components both converge in ~2 rounds,
-    and a propagation round is one join + one groupBy where a star
-    alternation is two of each. Star wins when component diameter exceeds
-    the round budget (long chains).
-    """
-    edges, small = _components_small(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v")),
-        "duplicate_clusters",
+    Above the cap, or with other id types, alternating large-star/small-star
+    (:func:`_star_fixpoint`): O(log² n) rounds whose intermediate edge sets
+    stay star-shaped, exact on any component diameter. On 1M random edges
+    (4 cores) it cost ~1.3× the min-label propagation it replaced (32.1 vs
+    25.2 s), which stopped after 50 rounds with wrong labels on longer
+    chains."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    spark = pairs.sparkSession
+    edges = pairs.select(
+        F.col(id_a).alias("u"), F.col(id_b).alias("v")
+    ).localCheckpoint(eager=True)
+    # the labels of both paths take the union-widened id type
+    id_type = edges.union(edges.select("v", "u")).schema["u"].dataType
+    cap = _union_find_cap(spark)
+    # counting the materialized checkpoint is a scan; fetching with a limit
+    # would shuffle every partition's head into one above the cap
+    n = edges.count()
+    small = n <= cap and (
+        isinstance(id_type, T.IntegralType) or id_type == T.StringType()
     )
-    if small is not None:
-        return small
-    edges = (
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .union(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    logger.info(
+        "duplicate_clusters: %s path, %d edges, cap %d",
+        "union-find" if small else "star",
+        n,
+        cap,
     )
-    labels = (
-        edges.select("src")
-        .distinct()
-        .select(F.col("src").alias("node"), F.col("src").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
-        neighbor_labels = edges.join(
-            labels, edges.dst == labels.node
-        ).select(F.col("src").alias("node"), "label")
-        new_labels = (
-            labels.union(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
+    if small:
+        fetched = edges.toArrow()
+        u, v = fetched.column("u"), fetched.column("v")
+        nulls = bool(u.null_count or v.null_count)
+        arrow_type = to_arrow_type(id_type)
+        if nulls:
+            # a null end joins nothing: the other end stands alone
+            u, v = u.cast(arrow_type), v.cast(arrow_type)
+            both = pa.table({"u": pc.coalesce(u, v), "v": pc.coalesce(v, u)})
+            u, v = both.drop_null().columns
+        nodes, roots = _union_find(u.to_pylist(), v.to_pylist())
+        table = pa.table(
+            {"node": pa.array(nodes, arrow_type), "label": pa.array(roots, arrow_type)}
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
+        schema = T.StructType(
+            [T.StructField("node", id_type), T.StructField("label", id_type)]
         )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
-def duplicate_clusters_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """Connected components of the self-loop-free pair graph: (node, label)
-    for every endpoint of a ``u != v`` pair, label = the component's min
-    id. Self-pair-only ids are not listed (``duplicate_clusters`` lists
-    them).
-
-    Within the driver-memory cap, union-find on the driver
-    (``_components_small``), shared with ``duplicate_clusters``. Above it,
-    alternating large-star/small-star (Kiveris et al., SoCC'14) — the
-    billion-edge path, O(log² n) rounds with intermediate edge sets that
-    stay star-shaped instead of growing with graph diameter — the variant
-    to use above the cap when dup chains are long or components are huge.
-    Identity-pinned against propagation and against the union-find path in
-    tests/test_r14_opt.py."""
-    edges, small = _components_small(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct(),
-        "duplicate_clusters_star",
-    )
-    if small is not None:
-        return small
-    all_nodes = (
-        edges.select("u").union(edges.select(F.col("v").alias("u"))).distinct()
-    )
-    stars = _star_fixpoint(edges, max_iterations)
-    labels = stars.select(F.col("u").alias("node"), F.col("v").alias("label"))
-    roots = all_nodes.join(stars.select("u"), "u", "left_anti").select(
-        F.col("u").alias("node"), F.col("u").alias("label")
-    )
-    return labels.union(roots)
+        labels = spark.createDataFrame(table, schema)
+    else:
+        # the null row computes the labels a second time: one scan of the
+        # checkpoint decides whether it is needed
+        nulls = not edges.where(F.col("u").isNull() | F.col("v").isNull()).isEmpty()
+        loop_free = edges.where(F.col("u") != F.col("v")).distinct()
+        stars = _star_fixpoint(loop_free.localCheckpoint(eager=True))
+        # every non-null id not pointing at a smaller one labels itself:
+        # component minima, self-pair-only ids, partners of a null id only
+        ids = edges.select("u").union(edges.select("v")).where(F.col("u").isNotNull())
+        roots = ids.distinct().join(stars.select("u"), "u", "left_anti")
+        labels = stars.toDF("node", "label").union(roots.select("u", "u"))
+    return labels.union(_null_row(edges, labels)) if nulls else labels
 
 
 def embedding_near_dup_pairs_exact_baseline(

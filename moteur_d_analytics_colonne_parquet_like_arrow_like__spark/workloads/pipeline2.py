@@ -913,7 +913,7 @@ def e2e_stage_frames(
         max_bucket_size=max_bucket_size,
         assert_cap_advised=check_cap,
     )
-    clusters = dedup.duplicate_clusters_star(pairs)
+    clusters = dedup.duplicate_clusters(pairs)
     dropped = clusters.where(F.col("node") != F.col("label")).select(
         F.col("node").alias("doc_id")
     )
@@ -970,9 +970,10 @@ def q_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     CENSUS-ADVISED bucket cap (the self-sizing default since r13 —
     VERDICT r12 item 2: the old pinned cap=4 default carried the r10
     recall cliff, silently passing 4,176 near-dup docs at sf1 while the
-    census costs 0.96×) → connected components (large-star/small-star,
-    the billion-edge path) keeping one doc per cluster → Gopher quality
-    cut → weighted mixture sample → pack into 512-token sequences.
+    census costs 0.96×) → connected components (union-find within the
+    driver cap, large-star/small-star above it) keeping one doc per
+    cluster → Gopher quality cut → weighted mixture sample → pack into
+    512-token sequences.
     Returns each surviving document's source, mixture keep fraction, and
     packed-sequence span, ordered by doc_id.
 
@@ -1168,7 +1169,7 @@ def e2e_funnel_flags(
     whose keep fractions are computed over the stage-3 survivors because
     the mixture composes with, not commutes past, the quality cut).
     Membership flags reuse the SAME operators as ``pipeline_end_to_end``
-    (exact_dedup / minhash_lsh_pairs / duplicate_clusters_star /
+    (exact_dedup / minhash_lsh_pairs / duplicate_clusters /
     gopher_quality / mixture_sample), so report and span gate cannot
     disagree on funnel semantics."""
     from ..functions import words
@@ -1190,7 +1191,7 @@ def e2e_funnel_flags(
         max_bucket_size=max_bucket_size,
     )
     dropped = (
-        dedup.duplicate_clusters_star(pairs)
+        dedup.duplicate_clusters(pairs)
         .where(F.col("node") != F.col("label"))
         .select(F.col("node").alias("doc_id"), F.lit(1).alias("__dropped"))
     )

@@ -65,3 +65,83 @@ def assert_explosion_pinned(df, key: str, min_pins: int = 2) -> str:
         f"hashpartitioning({key}...) exchanges, found {got}\n{plan[:2000]}"
     )
     return plan
+
+
+def propagation_reference(pairs, id_a="id_a", id_b="id_b", max_iterations=50):
+    """Iterative min-label propagation, ``duplicate_clusters``' engine
+    before large-star/small-star replaced it, kept verbatim as the
+    reference for its (node, label) rows, null ids included."""
+    from pyspark.sql import functions as F
+
+    edges = (
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        edges.select("src")
+        .distinct()
+        .select(F.col("src").alias("node"), F.col("src").alias("label"))
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(max_iterations):
+        neighbor_labels = edges.join(
+            labels, edges.dst == labels.node
+        ).select(F.col("src").alias("node"), "label")
+        new_labels = (
+            labels.union(neighbor_labels)
+            .groupBy("node")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=True)
+        )
+        changed = (
+            new_labels.alias("n")
+            .join(labels.alias("o"), "node")
+            .where(F.col("n.label") != F.col("o.label"))
+            .count()
+        )
+        labels = new_labels
+        if changed == 0:
+            break
+    return labels
+
+
+def bfs_components(edges):
+    """Pure-Python reference: (node, min id of its component) rows over
+    every endpoint of ``edges``, by breadth-first search, in
+    :func:`sorted_rows` order."""
+    adj = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    label = {}
+    for start in sorted(adj):
+        if start in label:
+            continue
+        seen, frontier = {start}, [start]
+        while frontier:
+            frontier = [n for x in frontier for n in adj[x] if n not in seen]
+            seen.update(frontier)
+        label.update({n: start for n in seen})
+    return sorted(label.items(), key=repr)
+
+
+def sorted_rows(df):
+    # repr orders rows holding a null node too
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def clusters_on_both_paths(monkeypatch, pairs):
+    """``duplicate_clusters(pairs)``'s sorted rows on the union-find path
+    and on the large-star/small-star path (union-find cap patched to 0),
+    in that order."""
+    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.operators import (
+        dedup,
+    )
+
+    with monkeypatch.context() as m:
+        rows = [sorted_rows(dedup.duplicate_clusters(pairs))]
+        m.setattr(dedup, "_union_find_cap", lambda spark: 0)
+        rows.append(sorted_rows(dedup.duplicate_clusters(pairs)))
+    return rows

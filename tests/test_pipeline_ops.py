@@ -2,6 +2,12 @@
 
 from __future__ import annotations
 
+from conftest import (
+    bfs_components,
+    clusters_on_both_paths,
+    propagation_reference,
+    sorted_rows,
+)
 from pyspark.sql import functions as F
 
 from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.operators import (
@@ -216,35 +222,22 @@ def test_real_media_decode_parses_headers(spark):
     assert multimodal.decode_media(media, require_real_codec=True).count() == 30
 
 
-def _on_both_paths(monkeypatch, fn, *args):
-    """``fn(*args)``'s rows on the union-find path and on the fixpoint path
-    (union-find cap patched to 0), in that order."""
-    with monkeypatch.context() as m:
-        rows = [fn(*args).collect()]
-        m.setattr(dedup, "_union_find_cap", lambda spark: 0)
-        rows.append(fn(*args).collect())
-    return rows
-
-
 def test_duplicate_clusters_components(spark, monkeypatch):
     # chain 1-2-3, clique 10-11, singleton edge 20-21: labels = component min
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21)], "id_a long, id_b long"
     )
-    for rows in _on_both_paths(monkeypatch, dedup.duplicate_clusters, pairs):
-        got = {r["node"]: r["label"] for r in rows}
-        assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
+    for rows in clusters_on_both_paths(monkeypatch, pairs):
+        assert dict(rows) == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
 def test_duplicate_clusters_long_chain(spark, monkeypatch):
-    # a 12-node path exercises multiple propagation iterations on the
-    # fixpoint path
+    # a 13-node path takes several large-star/small-star rounds above the cap
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "id_a long, id_b long"
     )
-    for labels in _on_both_paths(monkeypatch, dedup.duplicate_clusters, pairs):
-        assert all(r["label"] == 0 for r in labels)
-        assert len(labels) == 13
+    for rows in clusters_on_both_paths(monkeypatch, pairs):
+        assert sorted(rows) == [(i, 0) for i in range(13)]
 
 
 def test_tokenize_udtf_matches_explode(spark):
@@ -365,10 +358,9 @@ def test_ivf_layout_partition_pruning(spark, tmp_path, sf_dir):
 
 
 def test_star_clusters_match_label_propagation(spark, monkeypatch):
-    """large-star/small-star reaches the same fixpoint as min-label
-    propagation on random graphs and on a 50-node chain (the adversarial
-    diameter case the star variant exists for). Each is checked on its
-    fixpoint path and on the union-find path both share below the cap."""
+    """large-star/small-star (above the cap) and union-find (within it)
+    return min-label propagation's rows on a random graph, and the true
+    component on a 50-node chain (the adversarial diameter case)."""
     import random
 
     rng = random.Random(7)
@@ -378,22 +370,13 @@ def test_star_clusters_match_label_propagation(spark, monkeypatch):
         if a != b:
             edges.add((min(a, b), max(a, b)))
     pairs = spark.createDataFrame(sorted(edges), "id_a long, id_b long")
-    runs = _on_both_paths(
-        monkeypatch, dedup.duplicate_clusters, pairs
-    ) + _on_both_paths(monkeypatch, dedup.duplicate_clusters_star, pairs)
-    lp_uf, lp, st_uf, st = (
-        {(r["node"], r["label"]) for r in rows} for rows in runs
-    )
-    assert st == lp
-    assert lp_uf == lp and st_uf == st
+    ref = sorted_rows(propagation_reference(pairs))
+    assert clusters_on_both_paths(monkeypatch, pairs) == [ref, ref]
 
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(50)], "id_a long, id_b long"
-    )
-    for rows in _on_both_paths(monkeypatch, dedup.duplicate_clusters_star, chain):
-        assert {(r["node"], r["label"]) for r in rows} == {
-            (i, 0) for i in range(51)
-        }
+    chain = [(i, i + 1) for i in range(50)]
+    want = bfs_components(chain)
+    pairs = spark.createDataFrame(chain, "id_a long, id_b long")
+    assert clusters_on_both_paths(monkeypatch, pairs) == [want, want]
 
 
 def test_winnowing_guarantees(spark):

@@ -5,49 +5,18 @@ red test, not a silent result change."""
 
 from __future__ import annotations
 
+import pytest
+from conftest import (
+    bfs_components,
+    clusters_on_both_paths,
+    propagation_reference,
+    sorted_rows,
+)
 from pyspark.sql import functions as F
 
 from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.operators import (
     dedup,
 )
-
-
-def _propagation_reference(pairs, id_a="id_a", id_b="id_b", max_iterations=50):
-    """The pre-r14 duplicate_clusters: iterative min-label propagation —
-    kept verbatim as the identity reference for the star-contraction
-    rewrite (VERDICT r13 item 6)."""
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select("src")
-        .distinct()
-        .select(F.col("src").alias("node"), F.col("src").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
-        neighbor_labels = edges.join(
-            labels, edges.dst == labels.node
-        ).select(F.col("src").alias("node"), "label")
-        new_labels = (
-            labels.union(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
 
 
 _GRAPHS = {
@@ -115,51 +84,22 @@ def test_agg_approx_sketches_split_distinct_identity(spark, sf_dir):
     assert [tuple(r) for r in new.collect()] == [tuple(r) for r in old.collect()]
 
 
-def _bfs_components(edges):
-    """Pure-Python reference: (node, min id of its component) rows over
-    every endpoint of ``edges``, by breadth-first search, in ``_rows``
-    order."""
-    adj = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    label = {}
-    for start in sorted(adj):
-        if start in label:
-            continue
-        seen, frontier = {start}, [start]
-        while frontier:
-            frontier = [n for x in frontier for n in adj[x] if n not in seen]
-            seen.update(frontier)
-        label.update({n: start for n in seen})
-    return sorted(label.items(), key=repr)
-
-
-def _rows(df):
-    # repr orders rows holding a null node too
-    return sorted((tuple(r) for r in df.collect()), key=repr)
-
-
-def _fixpoint_rows(fn, pairs, monkeypatch):
-    """``fn``'s rows with the union-find cap at 0, so its fixpoint runs."""
-    with monkeypatch.context() as m:
-        m.setattr(dedup, "_union_find_cap", lambda spark: 0)
-        return _rows(fn(pairs))
-
-
 def _paths(caplog):
     """``"<entry>: <path>"`` of every components log line captured."""
     msgs = [r.getMessage() for r in caplog.records]
     return [m.split(" path")[0] for m in msgs if " path" in m]
 
 
+_BOTH = ["duplicate_clusters: union-find", "duplicate_clusters: star"]
+
+
 def test_duplicate_clusters_star_contraction_identity(spark, monkeypatch, caplog):
-    """Both entry points must reproduce their fixpoints' (node, label) rows
-    EXACTLY through the union-find path on adversarial graph shapes —
+    """Both paths of ``duplicate_clusters`` (union-find within the cap,
+    large-star/small-star above it) must reproduce the propagation
+    reference's (node, label) rows EXACTLY on adversarial graph shapes —
     chains, cliques, self-pairs, hubs, multi-component — and on random
-    200-edge graphs; ``duplicate_clusters`` also equals the propagation
-    reference (self-pair-only nodes listed), ``duplicate_clusters_star``
-    the BFS components of the self-loop-free edges."""
+    200-edge graphs: self-pair-only nodes stay listed, labelled with
+    themselves, on both."""
     import random
 
     graphs = dict(_GRAPHS)
@@ -172,65 +112,78 @@ def test_duplicate_clusters_star_contraction_identity(spark, monkeypatch, caplog
     for name, edges in graphs.items():
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         caplog.clear()
-        new = _rows(dedup.duplicate_clusters(pairs))
-        star = _rows(dedup.duplicate_clusters_star(pairs))
-        assert _paths(caplog) == [
-            "duplicate_clusters: union-find",
-            "duplicate_clusters_star: union-find",
-        ], name
-        ref = _rows(_propagation_reference(pairs))
-        assert new == ref, f"graph {name}: {new} != {ref}"
-        assert new == _fixpoint_rows(dedup.duplicate_clusters, pairs, monkeypatch)
-        loop_free = [(a, b) for a, b in edges if a != b]
-        assert star == _bfs_components(loop_free), name
-        assert star == _fixpoint_rows(dedup.duplicate_clusters_star, pairs, monkeypatch)
+        uf, star = clusters_on_both_paths(monkeypatch, pairs)
+        assert _paths(caplog) == _BOTH, name
+        ref = sorted_rows(propagation_reference(pairs))
+        assert uf == ref, f"graph {name}: {uf} != {ref}"
+        assert star == ref, f"graph {name}: {star} != {ref}"
+        assert ref == bfs_components(edges), name
 
 
-def test_duplicate_clusters_null_endpoint_takes_fixpoint(spark, monkeypatch, caplog):
-    """A null endpoint sends ``duplicate_clusters`` to its fixpoint, which
-    lists the null node; the star entry drops null pairs with its
-    ``u != v`` filter, so it stays on union-find. Both keep their rows."""
-    edges = [(1, None), (2, 3), (3, 1), (None, 5), (5, 6)]
-    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+def test_duplicate_clusters_null_endpoint_rows(spark, monkeypatch, caplog):
+    """A null id joins no two components and is listed once, with the
+    least label among its non-null neighbours (null when it has none), as
+    propagation lists it; the partner of a null id alone is its own
+    component. Both paths, and no null moves a graph off union-find."""
+    graphs = {
+        ((1, None), (2, 3), (3, 1), (None, 5), (5, 6)): {
+            (1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (None, 1)
+        },
+        ((None, None), (4, 4), (9, None), (None, 8)): {
+            (4, 4), (8, 8), (9, 9), (None, 8)
+        },
+        ((None, None),): {(None, None)},
+    }
     caplog.set_level("INFO", logger=dedup.__name__)
-    new = _rows(dedup.duplicate_clusters(pairs))
-    star = _rows(dedup.duplicate_clusters_star(pairs))
-    assert _paths(caplog) == [
-        "duplicate_clusters: fixpoint",
-        "duplicate_clusters_star: union-find",
-    ]
-    assert new == _rows(_propagation_reference(pairs))
-    assert (None, 1) in new
-    assert star == _fixpoint_rows(dedup.duplicate_clusters_star, pairs, monkeypatch)
-    assert star == _bfs_components([(2, 3), (3, 1), (5, 6)])
+    for edges, want in graphs.items():
+        pairs = spark.createDataFrame(list(edges), "id_a long, id_b long")
+        caplog.clear()
+        uf, star = clusters_on_both_paths(monkeypatch, pairs)
+        assert _paths(caplog) == _BOTH, edges
+        ref = sorted_rows(propagation_reference(pairs))
+        assert set(ref) == want, edges
+        assert uf == ref, f"{edges}: {uf} != {ref}"
+        assert star == ref, f"{edges}: {star} != {ref}"
 
 
-def test_duplicate_clusters_chain_past_iteration_budget(spark):
-    """A 60-node chain is longer than the fixpoints' 50-round budget;
-    union-find returns its true component, as the BFS reference does."""
+def test_duplicate_clusters_chain_past_iteration_budget(spark, monkeypatch):
+    """A 60-node chain is longer than the 50 rounds min-label propagation
+    ran; both paths return its true component, as the BFS reference
+    does."""
     edges = [(i, i + 1) for i in range(59)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    want = _bfs_components(edges)
+    want = bfs_components(edges)
     assert set(want) == {(i, 0) for i in range(60)}
-    assert _rows(dedup.duplicate_clusters(pairs)) == want
-    assert _rows(dedup.duplicate_clusters_star(pairs)) == want
+    assert clusters_on_both_paths(monkeypatch, pairs) == [want, want]
+
+
+def test_star_fixpoint_raises_when_rounds_run_out(spark, monkeypatch):
+    """Above the cap, a round budget too small for the graph raises
+    instead of returning unconverged star edges as labels."""
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], "id_a long, id_b long"
+    )
+    monkeypatch.setattr(dedup, "_union_find_cap", lambda spark: 0)
+    monkeypatch.setattr(dedup, "_STAR_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        dedup.duplicate_clusters(pairs)
 
 
 def test_duplicate_clusters_cap_straddle(spark, monkeypatch, caplog):
     """The same input on either side of the cap: one edge under it runs
-    the fixpoint, at it union-find, and both give the same rows."""
+    large-star/small-star, at it union-find, and both give the same
+    rows."""
     edges = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)] + [
         (i, i + 1) for i in range(10, 16)
     ]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     caplog.set_level("INFO", logger=dedup.__name__)
-    for fn in (dedup.duplicate_clusters, dedup.duplicate_clusters_star):
-        got = {}
-        for cap in (len(edges) - 1, len(edges)):
-            monkeypatch.setattr(dedup, "_union_find_cap", lambda spark, c=cap: c)
-            caplog.clear()
-            got[cap] = _rows(fn(pairs))
-            path = "fixpoint" if cap < len(edges) else "union-find"
-            assert _paths(caplog) == [f"{fn.__name__}: {path}"]
-        assert got[len(edges) - 1] == got[len(edges)]
-        assert got[len(edges)] == _bfs_components(edges)
+    got = {}
+    for cap in (len(edges) - 1, len(edges)):
+        monkeypatch.setattr(dedup, "_union_find_cap", lambda spark, c=cap: c)
+        caplog.clear()
+        got[cap] = sorted_rows(dedup.duplicate_clusters(pairs))
+        path = "star" if cap < len(edges) else "union-find"
+        assert _paths(caplog) == [f"duplicate_clusters: {path}"]
+    assert got[len(edges) - 1] == got[len(edges)]
+    assert got[len(edges)] == bfs_components(edges)

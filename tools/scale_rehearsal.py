@@ -212,8 +212,8 @@ TARGETS = [
     "sim_jl_distortion",
     # r13 continuation batch 3: the remaining never-rehearsed heavy
     # sweep rows — the PQ/OPQ recall grids and ADC rankings (trained
-    # per rep like their ivfpq siblings), the min-label components
-    # twin, the t-digest/HLL/CMS sketch battery, and the all-columns
+    # per rep like their ivfpq siblings), the components gate, the
+    # t-digest/HLL/CMS sketch battery, and the all-columns
     # profiler.
     "sim_pq_recall",
     "sim_opq_recall",
@@ -270,17 +270,17 @@ EAGER = {
     # version probe + diff read, not the one-time merge history build
     "table_snapshot_diff",
     "table_incremental_view",
-    # the components fixpoint localCheckpoints per round at plan build
+    # duplicate_clusters checkpoints and counts its edges at plan build
     "pipeline_end_to_end",
-    # duplicate_clusters' min-label loop is eager at plan build too
+    # these gates call duplicate_clusters too
     "dedup_keep_best",
     "dedup_keep_best_lsh",
     "pipeline_curate",
-    # e2e_funnel_flags runs the large-star fixpoint at plan build
+    # e2e_funnel_flags resolves its components at plan build
     "pipeline_funnel_report",
     # IVF directory training localCheckpoints eagerly at plan build
     "sim_ivfpq_rerank",
-    # the large-star/small-star fixpoint localCheckpoints per round
+    # an alias of dedup_clusters, eager at plan build the same way
     "dedup_clusters_star",
     # 8 real micro-batches execute at plan build (availableNow stream)
     "stream_stateful_multibatch",
@@ -294,7 +294,7 @@ EAGER = {
     "sim_opq_recall",
     "sim_pq_adc",
     "sim_ivfpq_adc",
-    # min-label propagation fixpoint localCheckpoints per round
+    # duplicate_clusters checkpoints and counts its edges at plan build
     "dedup_clusters",
     # centroids localCheckpoint between Lloyd rounds at plan build
     "kmeans_iterate",
