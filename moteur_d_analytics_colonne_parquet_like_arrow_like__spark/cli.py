@@ -191,9 +191,9 @@ def _cmd_sql(args: argparse.Namespace) -> int:
 def _is_col_dir(path: str) -> bool:
     import os
 
-    return os.path.isdir(path) and any(
-        f.endswith(".col") for f in os.listdir(path)
-    )
+    from .sources.colfile import col_files
+
+    return os.path.isdir(path) and bool(col_files(path))
 
 
 def _cmd_snapshot(args: argparse.Namespace) -> int:

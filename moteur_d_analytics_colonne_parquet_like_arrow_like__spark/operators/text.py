@@ -79,7 +79,7 @@ def quality_features(df: DataFrame, text_col: str) -> DataFrame:
     # lowercasing produces is outside BOTH, so it counts as punctuation
     # under either form), so the counts are value-identical while skipping
     # two regex-engine passes per document — measured 201 → 124 ms median
-    # on the 5k-doc bench shape (tools/abtest_r13.py), byte-identical
+    # on the 5k-doc bench shape (r13 interleaved A/B), byte-identical
     # output, pinned by tests/test_r13_opt.py against the regex form.
     base = ws_stage.select(
         "*",

@@ -51,7 +51,7 @@ def top_k_per_group_ordered(
     order, the filtered output is already totally ordered by
     (partition_cols, rnk) across the range-ordered partitions. Measured on
     the bench shape (orders, 150k rows, 32 cores): 254 → 150 ms median,
-    row- AND order-identical (tools/abtest_r13.py). Scale note: this form
+    row- AND order-identical (r13 interleaved A/B). Scale note: this form
     shuffles every input row once, where the two-exchange form's partial
     WindowGroupLimit can pre-prune to ≤ k·keys·tasks rows before its first
     exchange — for corpora with per-key duplication ≫ task count, prefer

@@ -68,22 +68,14 @@ class ColDataSourceReader(DataSourceReader):
         self.columns = [c.strip() for c in cols.split(",")] if cols else None
         self.predicate = _parse_predicate(options.get("predicate"))
 
-    def _paths(self) -> list[str]:
+    def partitions(self):
         import os
 
-        if os.path.isdir(self.path):
-            return [
-                os.path.join(self.path, f)
-                for f in sorted(os.listdir(self.path))
-                if f.endswith(".col")
-            ]
-        return [self.path]
+        from .colfile import _skippable_row_groups, col_files, read_col_metadata
 
-    def partitions(self):
-        from .colfile import _skippable_row_groups, read_col_metadata
-
+        paths = col_files(self.path) if os.path.isdir(self.path) else [self.path]
         parts = []
-        for fpath in self._paths():
+        for fpath in paths:
             schema, row_groups, _ = read_col_metadata(fpath)
             skips = _skippable_row_groups(row_groups, schema, self.predicate)
             parts += [
@@ -96,23 +88,15 @@ class ColDataSourceReader(DataSourceReader):
     def read(self, partition: _RowGroupPartition):
         # Runs on the executor: open the file, seek to THIS row group's
         # chunks, decode only the projected columns.
-        from .colfile import _decode_chunk, read_col_metadata
+        from .colfile import read_row_groups
 
-        fpath = partition.file or self.path
-        schema, row_groups, _ = read_col_metadata(fpath)
-        rg = row_groups[partition.index]
-        proj = self.columns or schema.names
-        if self.predicate is not None and self.predicate[0] not in proj:
-            proj = list(proj) + [self.predicate[0]]
-        idxs = [schema.index_of(c) for c in proj]
-        data = []
-        with open(fpath, "rb") as f:
-            for ci in idxs:
-                ch = rg.chunks[ci]
-                f.seek(ch.file_offset)
-                raw = f.read(ch.total_size)
-                data.append(_decode_chunk(raw, schema.columns[ci], ch))
-        rows = zip(*data)
+        schema, proj, groups = read_row_groups(
+            partition.file or self.path,
+            self.columns,
+            self.predicate,
+            index=partition.index,
+        )
+        rows = (row for cols in groups for row in zip(*cols))
         if self.predicate is not None:
             col, op, value = self.predicate
             pi = proj.index(col)
@@ -143,7 +127,7 @@ class ColDataSource(DataSource):
     def schema(self):
         from pyspark.sql import types as T
 
-        from .colfile import read_col_metadata
+        from .colfile import col_files, read_col_metadata
 
         import os
 
@@ -151,13 +135,13 @@ class ColDataSource(DataSource):
         proj = [c.strip() for c in cols.split(",")] if cols else None
         path = self.options["path"]
         if os.path.isdir(path):  # streaming: schema from the first file
-            listing = sorted(f for f in os.listdir(path) if f.endswith(".col"))
+            listing = col_files(path)
             if not listing:
                 raise FileNotFoundError(
                     f"no .col files yet in {path}; schema cannot be inferred "
                     "— write one file first or pass an explicit schema"
                 )
-            path = os.path.join(path, listing[0])
+            path = listing[0]
         schema, _, _ = read_col_metadata(path)
         names = proj or schema.names
         return T.StructType(
@@ -191,35 +175,20 @@ class ColStreamReader(SimpleDataSourceStreamReader):
         if not self.path:
             raise ValueError("stream format('col') needs .load(<dir>)")
 
-    def _files(self):
-        import os
+    def _files(self) -> list[str]:
+        from .colfile import col_files
 
-        return sorted(
-            f for f in os.listdir(self.path) if f.endswith(".col")
-        )
+        return col_files(self.path)
 
     def initialOffset(self) -> dict:
         return {"files_consumed": 0}
 
-    def _read_files(self, names):
-        import os
+    def _read_files(self, paths):
+        from .colfile import read_row_groups
 
-        from .colfile import _decode_chunk, read_col_metadata
-
-        for name in names:
-            fpath = os.path.join(self.path, name)
-            schema, row_groups, _ = read_col_metadata(fpath)
-            with open(fpath, "rb") as f:
-                for rg in row_groups:
-                    cols = []
-                    for ci in range(len(schema.columns)):
-                        ch = rg.chunks[ci]
-                        f.seek(ch.file_offset)
-                        raw = f.read(ch.total_size)
-                        cols.append(
-                            _decode_chunk(raw, schema.columns[ci], ch)
-                        )
-                    yield from zip(*cols)
+        for fpath in paths:
+            for cols in read_row_groups(fpath)[2]:
+                yield from zip(*cols)
 
     def read(self, start: dict):
         # the simple stream API prefetches on the driver and requires a

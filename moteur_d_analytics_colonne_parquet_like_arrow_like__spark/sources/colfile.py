@@ -614,42 +614,74 @@ def _skippable_row_groups(
     return out
 
 
+def col_files(directory: str) -> list[str]:
+    """Paths of the ``.col`` files in ``directory``, in name order."""
+    return [
+        os.path.join(directory, f)
+        for f in sorted(os.listdir(directory))
+        if f.endswith(".col")
+    ]
+
+
+def read_row_groups(
+    path: str,
+    columns: list[str] | None = None,
+    predicate: tuple[str, str, int] | None = None,
+    index: int | None = None,
+):
+    """Decode one ``.col`` file row group by row group. Returns the file's
+    schema, the decoded column names (``columns``, default all, plus the
+    predicate column when it is not among them) and an iterator of one list
+    of column value lists per row group. Row groups the zone maps rule out
+    for ``predicate`` are never read; ``index`` reads just that row group.
+    Only the projected column chunks are read and decoded, mirroring the
+    reference scanner's pruning (cae/src/execution.cpp:252-261)."""
+    schema, row_groups, _ = read_col_metadata(path)
+    proj = list(columns or schema.names)
+    if predicate is not None and predicate[0] not in proj:
+        proj.append(predicate[0])
+    idxs = [schema.index_of(c) for c in proj]
+    skips = _skippable_row_groups(row_groups, schema, predicate)
+
+    def groups():
+        with open(path, "rb") as f:
+            for i, (rg, skip) in enumerate(zip(row_groups, skips)):
+                if skip or (index is not None and i != index):
+                    continue
+                cols = []
+                for ci in idxs:
+                    ch = rg.chunks[ci]
+                    f.seek(ch.file_offset)
+                    raw = f.read(ch.total_size)
+                    cols.append(_decode_chunk(raw, schema.columns[ci], ch))
+                yield cols
+
+    return schema, proj, groups()
+
+
 def read_col(
     spark: SparkSession,
     path: str,
     columns: list[str] | None = None,
     predicate: tuple[str, str, int] | None = None,
 ) -> DataFrame:
-    """Load a .col file into a DataFrame (with column projection — only
-    requested chunks are read and decoded, mirroring the reference scanner's
-    pruning, cae/src/execution.cpp:252-261).
+    """Load a .col file into a DataFrame, decoded on the driver (with column
+    projection — only requested chunks are read and decoded).
 
     ``predicate=(col, op, value)`` (op in eq/ne/lt/le/gt/ge, int columns)
     additionally applies the reference's zone-map skipping: row groups
     whose page stats exclude the value are never read OR decoded, and the
     surviving rows are filtered exactly."""
-    schema, row_groups, _total = read_col_metadata(path)
-    proj = columns or schema.names
-    if predicate is not None and predicate[0] not in proj:
-        proj = list(proj) + [predicate[0]]
-    idxs = [schema.index_of(c) for c in proj]
-    skips = _skippable_row_groups(row_groups, schema, predicate)
-
-    data: dict[str, list] = {c: [] for c in proj}
-    with open(path, "rb") as f:
-        for rg, skip in zip(row_groups, skips):
-            if skip:
-                continue
-            for c, ci in zip(proj, idxs):
-                ch = rg.chunks[ci]
-                f.seek(ch.file_offset)
-                raw = f.read(ch.total_size)
-                data[c].extend(_decode_chunk(raw, schema.columns[ci], ch))
+    schema, proj, groups = read_row_groups(path, columns, predicate)
+    data: list[list] = [[] for _ in proj]
+    for cols in groups:
+        for acc, vals in zip(data, cols):
+            acc.extend(vals)
 
     spark_schema = T.StructType(
-        [schema.columns[ci].to_spark_field(nullable=False) for ci in idxs]
+        [schema.columns[schema.index_of(c)].to_spark_field(nullable=False) for c in proj]
     )
-    rows = list(zip(*[data[c] for c in proj])) if proj else []
+    rows = list(zip(*data)) if proj else []
     df = spark.createDataFrame(rows, spark_schema)
     if predicate is not None:
         col, op, value = predicate

@@ -251,7 +251,7 @@ def run_to_memory(
     after the run either way): the memory sink itself is non-durable and
     scoped to this session, so a WAL + state checkpoint that outlives the
     process buys nothing — there is no sink to recover INTO. Measured
-    (tools/stream_floor.py, r9): the state-store delta writes inside
+    from StreamingQueryProgress (r9): the state-store delta writes inside
     addBatch are the single biggest floor component (524 ms of a 1.14 s
     replay) and moving them off disk shaves ~11% end-to-end. A DURABLE
     sink (foreach_batch_upsert) must keep its checkpoint on real storage
@@ -494,8 +494,6 @@ def foreach_batch_kmv_merge(
     at-least-once delivery to exactly-once sketch state. At 100 TB the
     per-batch cost is the batch's own distinct + a groups*k-row read —
     table size never enters."""
-    import shutil
-
     from pyspark.sql import Window
 
     from ..operators.sketches import kmv_sketch
@@ -518,16 +516,19 @@ def foreach_batch_kmv_merge(
         merged.write.mode("overwrite").parquet(staging)
         _publish_swap(staging, path)
 
-    (
-        stream.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join("/tmp", f"ckpt_kmv_{uuid.uuid4().hex[:8]}"),
+    # A fresh name per call, so the checkpoint can never be resumed and
+    # nothing is lost by deleting it; replays merge idempotently anyway.
+    ckpt = os.path.join(_volatile_ckpt_root(), f"ckpt_kmv_{uuid.uuid4().hex[:8]}")
+    try:
+        (
+            stream.writeStream.foreachBatch(merge)
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+            .awaitTermination()
         )
-        .start()
-        .awaitTermination()
-    )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def stateful_user_running_stats(

@@ -774,7 +774,7 @@ def advised_bucket_cap(s1: DataFrame) -> int:
 
 #: Materialization scale guard for ``materialize="auto"`` (VERDICT r11
 #: item 7), in CORPUS PARQUET FILE BYTES. What the r12 4-arm A/B
-#: (pipeline_e2e_ab.json) actually shows: at both fixture corpora (0.6 MB
+#: (recorded in docs/SCALE.md) actually shows: at both fixture corpora (0.6 MB
 #: and 5.9 MB on disk — parquet compresses the synthetic text ~30x, so
 #: the r11 "525 MB" was SCANNED bytes, not writable bytes)
 #: materialization wins or ties (sf0.1: 7.73 vs lazy 8.48 s; sf1: 12.33
@@ -786,9 +786,9 @@ def advised_bucket_cap(s1: DataFrame) -> int:
 #: OS cache, so far above the fixture scale the writes must lose — at
 #: 100 TB materialize-everything is certainly wrong. The guard keeps
 #: auto on the measured-winning side below 64 MB of corpus parquet and
-#: deliberately lazy above it, where no measurement exists; the A/B tool
-#: re-measures all four arms each round so a drift shows up as an
-#: auto-mode mispick in pipeline_e2e_ab.json.
+#: deliberately lazy above it, where no measurement exists;
+#: ``tools/ab.py e2e_stage_frames`` re-measures the lazy and auto arms, so
+#: a drift shows up as auto losing to lazy.
 AUTO_MAT_MAX_BYTES = 64 * 1024 * 1024
 
 
@@ -823,9 +823,9 @@ def e2e_stage_frames(
     materialize: str = "explicit",
 ) -> dict[str, DataFrame]:
     """The curation funnel, one DataFrame per cumulative stage — shared
-    by the ``pipeline_end_to_end`` gate (which returns the final frame)
-    and ``tools/pipeline_e2e_stages.py`` (which times each prefix to
-    attribute wall share per stage). Keys are ordered s1..s5.
+    by the ``pipeline_end_to_end`` gate (which returns the final frame),
+    perfbench's traced ``corpus_curation`` run (which times each stage)
+    and ``tools/ab.py e2e_stage_frames``. Keys are ordered s1..s5.
 
     ``upto`` stops construction after that stage — the components
     fixpoint in s2 executes jobs at plan-BUILD time (localCheckpoint per
@@ -871,8 +871,8 @@ def e2e_stage_frames(
     docs = _documents(spark, sf_dir).select("doc_id", "source", "text")
     if materialize == "auto":
         # VERDICT r11 item 7: apply the measured crossover rule instead
-        # of making the caller eyeball pipeline_e2e_ab.json —
-        # materialize_dir becomes a SCRATCH hint the rule may decline.
+        # of making the caller pick an arm — materialize_dir becomes a
+        # SCRATCH hint the rule may decline.
         if materialize_dir is None:
             raise ValueError(
                 "materialize='auto' needs a scratch materialize_dir to "

@@ -290,3 +290,22 @@ def test_publish_swap_recovers_displaced_state(tmp_path):
     assert open(os.path.join(path, "_SUCCESS")).read() == "v2"
     assert not os.path.exists(staging)
     assert not os.path.exists(path + ".old")
+
+
+def test_kmv_merge_leaves_no_checkpoint(spark, sf_dir, tmp_path):
+    # Each foreach_batch_kmv_merge call checkpoints under a fresh name, so
+    # the checkpoint can never be resumed; the call must delete it.
+    import glob
+    import tempfile
+
+    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.workloads import streaming_ops
+
+    roots = {S._volatile_ckpt_root(), tempfile.gettempdir(), "/tmp"}
+
+    def ckpts():
+        return {p for r in roots for p in glob.glob(os.path.join(r, "ckpt_kmv_*"))}
+
+    before = ckpts()
+    sk = streaming_ops._kmv_stream_sketch(spark, sf_dir, str(tmp_path / "sk"))
+    assert sk.count() > 0
+    assert ckpts() - before == set()

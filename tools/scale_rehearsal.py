@@ -131,8 +131,7 @@ TARGETS = [
     "graph_link_prediction",
     "table_snapshot_diff",
     "table_incremental_view",
-    # round-10 (VERDICT r9 item 3): the composed curation DAG — also
-    # decomposed per-stage by tools/pipeline_e2e_stages.py.
+    # round-10 (VERDICT r9 item 3): the composed curation DAG
     "pipeline_end_to_end",
     # round-10 rotation extras: the two heaviest sweep rows that scale
     # with the replica and had never been rehearsed — the capped
@@ -414,171 +413,6 @@ def time_query(spark, qs, name: str, sf_dir: str, eager: bool) -> float:
     return round(times[len(times) // 2], 3)
 
 
-# ---- pre-r6 single-task-window shapes, kept ONLY as rehearsal baselines
-# (the "before" side of VERDICT r5 item 3's measurement; the registry
-# versions use operators/stats.two_phase_rank_cumsum instead).
-
-
-def _naive_customers_abc(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources.catalog import (
-        load_table,
-    )
-
-    orders = load_table(spark, sf_dir, "orders")
-    per_cust = orders.groupBy("o_custkey").agg(
-        F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)")).alias("rev")
-    )
-    w = Window.orderBy(F.col("rev").desc(), F.col("o_custkey").asc())
-    tot = per_cust.agg(F.sum("rev").alias("tot"))
-    ranked = (
-        per_cust.withColumn(
-            "cum",
-            F.sum("rev").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        .crossJoin(F.broadcast(tot))
-        .withColumn(
-            "__share",
-            F.col("cum").cast("double") / F.col("tot").cast("double"),
-        )
-        .withColumn(
-            "cls",
-            F.when(F.col("__share") <= 0.5, "A")
-            .when(F.col("__share") <= 0.8, "B")
-            .otherwise("C"),
-        )
-    )
-    return (
-        ranked.groupBy("cls")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_customers"),
-            F.round(
-                F.sum("rev").cast("double") / F.max("tot").cast("double"), 6
-            ).alias("rev_share_r"),
-        )
-        .orderBy("cls")
-    )
-
-
-def _naive_supplier_gini(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources.catalog import (
-        load_table,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    per = li.groupBy("l_suppkey").agg(
-        F.sum(F.round("l_extendedprice", 2).cast("decimal(18,2)")).alias("rev")
-    )
-    w = Window.orderBy(F.col("rev").asc(), F.col("l_suppkey").asc())
-    ranked = per.withColumn("i", F.row_number().over(w))
-    return ranked.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_suppliers"),
-        F.round(F.sum("rev").cast("double"), 2).alias("total_rev_r"),
-        F.round(
-            F.lit(2.0)
-            * F.sum((F.col("i") * F.col("rev")).cast("decimal(28,2)")).cast(
-                "double"
-            )
-            / (F.count(F.lit(1)) * F.sum("rev").cast("double"))
-            - (F.count(F.lit(1)) + F.lit(1)) / F.count(F.lit(1)).cast("double"),
-            6,
-        ).alias("gini_r"),
-    )
-
-
-def _naive_score_normalize(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.operators import text
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources.catalog import (
-        load_table,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    scored = text.quality_features(
-        docs.select("doc_id", "source", "text"), "text"
-    ).select("doc_id", "source", F.round("q_score", 6).alias("q6"))
-    w = Window.partitionBy("source").orderBy(
-        F.col("q6").asc(), F.col("doc_id").asc()
-    )
-    wn = Window.partitionBy("source")
-    out = scored.select(
-        "doc_id",
-        "source",
-        F.col("q6").alias("q_r"),
-        F.round(
-            F.when(
-                F.count(F.lit(1)).over(wn) > 1,
-                (F.row_number().over(w) - F.lit(1))
-                / (F.count(F.lit(1)).over(wn) - F.lit(1)),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("pct_r"),
-    )
-    return out.orderBy("doc_id")
-
-
-def _naive_customers_rfm(spark, sf_dir):
-    from pyspark.sql import Window
-
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark.sources.catalog import (
-        load_table,
-    )
-
-    def quintile(col_df, key, val):
-        counts = col_df.groupBy(F.col(val).alias("v")).agg(
-            F.count(F.lit(1)).alias("c")
-        )
-        w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-        cum = counts.withColumn(
-            "cb", F.coalesce(F.sum("c").over(w), F.lit(0)).cast("bigint")
-        )
-        tot = counts.agg(F.sum("c").cast("bigint").alias("n"))
-        scored = cum.crossJoin(F.broadcast(tot)).select(
-            F.col("v"), (F.expr("(cb * 5) div n") + F.lit(1)).alias("q")
-        )
-        return col_df.join(
-            F.broadcast(scored), col_df[val] == scored["v"]
-        ).select(F.col(key), F.col("q"))
-
-    orders = load_table(spark, sf_dir, "orders")
-    per = orders.groupBy("o_custkey").agg(
-        F.max(F.col("o_orderdate").cast("date")).alias("last_d"),
-        F.count(F.lit(1)).cast("bigint").alias("freq"),
-        F.sum(F.round("o_totalprice", 2).cast("decimal(18,2)"))
-        .cast("double")
-        .alias("money"),
-    )
-    anchor = per.agg(F.max("last_d").alias("a"))
-    per = per.crossJoin(F.broadcast(anchor)).withColumn(
-        "rec_inv", -F.datediff(F.col("a"), F.col("last_d")).cast("bigint")
-    )
-    r = quintile(per.select("o_custkey", "rec_inv"), "o_custkey", "rec_inv")
-    fq = quintile(per.select("o_custkey", "freq"), "o_custkey", "freq")
-    m = quintile(per.select("o_custkey", "money"), "o_custkey", "money")
-    rfm = (
-        r.withColumnRenamed("q", "r")
-        .join(fq.withColumnRenamed("q", "f"), "o_custkey")
-        .join(m.withColumnRenamed("q", "m"), "o_custkey")
-    )
-    return (
-        rfm.groupBy("r", "f", "m")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_customers"))
-        .orderBy("r", "f", "m")
-    )
-
-
-NAIVE_TWINS = {
-    "customers_abc": _naive_customers_abc,
-    "supplier_gini": _naive_supplier_gini,
-    "pipeline_score_normalize": _naive_score_normalize,
-    "customers_rfm": _naive_customers_rfm,
-}
-
-
 def main() -> int:
     args = [a for a in sys.argv[1:]]
     only = None
@@ -590,19 +424,11 @@ def main() -> int:
     spark = get_spark("scale_rehearsal")
     build_sf1(spark)
     qs = all_queries()
-    for tw_name, tw_fn in NAIVE_TWINS.items():
-        qs[tw_name + "__naive_window"] = tw_fn
     src = SRC if os.path.exists(SRC) else RAW
     report = {}
-    targets = []
-    for t in TARGETS:
-        targets.append(t)
-        if t in NAIVE_TWINS:
-            targets.append(t + "__naive_window")
-    if only is not None:
-        targets = [t for t in targets if t.split("__naive")[0] in only]
+    targets = TARGETS if only is None else [t for t in TARGETS if t in only]
     for name in targets:
-        eager = name in EAGER or name.split("__naive")[0] in EAGER
+        eager = name in EAGER
         t_small = time_query(spark, qs, name, src, eager)
         t_big = time_query(spark, qs, name, DST, eager)
         rows_small = qs[name](spark, src).count()
