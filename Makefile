@@ -4,7 +4,7 @@
 #
 # Targets:
 #   make check        pytest + oracle type audit + full strict oracle gate (sf0.01)
-#   make test         pytest only
+#   make test         Tier-1 pytest (the ROADMAP command), then perfbench's own tests
 #   make oracle       full strict Spark-vs-DuckDB oracle run at sf0.01
 #   make oracle-types fast DuckDB-only oracle output-type audit (no Spark)
 #   make bench        headline benchmark (one JSON line, sf0.1 by default)
@@ -17,7 +17,9 @@ SF_DIR ?= /root/testdata/sf0.01
 check: test oracle-types oracle
 
 test:
-	$(PY) -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 $(PY) -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+	$(PY) -m pytest perfbench -q
 
 oracle-types:
 	$(PY) tools/check_oracle.py --types-only $(SF_DIR)

@@ -202,6 +202,13 @@ def _prepare(df):
       them — verified by width scaling (11-col full scan 58 ms vs 2-col
       32 ms, same 600k rows) and by unchanged pinned row counts. Pruning
       cannot sneak in: the physical plan is fixed before any count.
+
+    One blind spot: prepared reps never time the range-bounds sampling
+    job of a range exchange (an ``orderBy``). ``toRdd()`` computes the
+    bounds once while the plan is prepared and every rep reuses them, so
+    a query with a range exchange runs one job per rep where a one-shot
+    run pays the sampling job too; its reps understate the sort's cost.
+    ``tools/ab.py`` inherits this through its prepared reps.
     """
     if not PREPARED_REPS:
         # BENCH_PREPARED=0 — the pre-r12 methodology, kept so the

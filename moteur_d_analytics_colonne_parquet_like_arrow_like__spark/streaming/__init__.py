@@ -31,10 +31,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 
 def _volatile_ckpt_root() -> str:
-    """Checkpoint root for bounded memory-sink replays: RAM-backed when the
-    platform offers it (the WAL + state deltas of a non-resumable query
-    into a non-durable sink have no recovery value — see run_to_memory),
-    the system temp dir otherwise."""
+    """Checkpoint root for bounded, non-resumable streaming runs: the
+    memory-sink replays and the ``foreachBatch`` sinks, each of which names
+    its checkpoint afresh per call and deletes it afterwards. RAM-backed
+    when the platform offers it (the WAL + state deltas of a query that is
+    never resumed have no recovery value — see run_to_memory), the system
+    temp dir otherwise."""
     shm = "/dev/shm"
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
         # Capacity guard: container runtimes often mount a tiny tmpfs
@@ -253,9 +255,12 @@ def run_to_memory(
     process buys nothing — there is no sink to recover INTO. Measured
     from StreamingQueryProgress (r9): the state-store delta writes inside
     addBatch are the single biggest floor component (524 ms of a 1.14 s
-    replay) and moving them off disk shaves ~11% end-to-end. A DURABLE
-    sink (foreach_batch_upsert) must keep its checkpoint on real storage
-    next to the sink table — this policy is memory-sink-specific.
+    replay) and moving them off disk shaves ~11% end-to-end. The
+    ``foreachBatch`` sinks (foreach_batch_upsert, foreach_batch_kmv_merge)
+    use the same volatile root: their durable state is the sink table, each
+    call's checkpoint has a fresh name and is never resumed, and their
+    merges are idempotent per batch. A deployment that resumes a query
+    across restarts needs its checkpoint on real storage next to the table.
     """
     name = query_name or f"mem_{uuid.uuid4().hex[:8]}"
     spark = sdf.sparkSession
@@ -392,8 +397,6 @@ def foreach_batch_upsert(
     same table), which upgrades at-least-once delivery to exactly-once
     table state.
     """
-    import shutil
-
     from pyspark.sql import Window
 
     # Final tie-breaker: batch provenance (__src 1=incoming, 0=existing),
@@ -459,18 +462,23 @@ def foreach_batch_upsert(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-    (
-        stream.writeStream.foreachBatch(
-            merge_bucketed if num_buckets else merge_full
-        )
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join("/tmp", f"ckpt_upsert_{uuid.uuid4().hex[:8]}"),
-        )
-        .start()
-        .awaitTermination()
+    # A fresh name per call, so the checkpoint can never be resumed and
+    # nothing is lost by deleting it; replays merge idempotently anyway.
+    ckpt = os.path.join(
+        _volatile_ckpt_root(), f"ckpt_upsert_{uuid.uuid4().hex[:8]}"
     )
+    try:
+        (
+            stream.writeStream.foreachBatch(
+                merge_bucketed if num_buckets else merge_full
+            )
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def foreach_batch_kmv_merge(

@@ -13,10 +13,20 @@ Oracle-authoring rules that keep the hashes stable across engines:
 - timestamps are projected as DATE or ISO strings where they appear in
   computed output,
 - ties in top-k output are broken by a unique key column.
+
+``all_queries()`` returns the gates in the order the driver verifies them,
+derived from the checkout's ``CORRECTNESS_r*.json`` signatures and
+``BEHAVIOR_CHANGED_SINCE`` (see ``_verify_order``); nothing about the order
+is committed by hand.
 """
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,343 +71,8 @@ _MODULES = [
     streaming_ops,
 ]
 
-# Round-14 verification priority (the driver samples the first ~50 entries
-# of all_queries()). The tuple is the FULL registry ordered by verification
-# urgency, regenerated each round by tools/gen_verify_first.py (VERDICT
-# r12 item 1 made this mechanical): (a) --front names — the six bench
-# formulations the r13 optimization round rewrote value-identically
-# (window_topk_per_group, tpch_q1, join_multiway, sim_topk_bruteforce,
-# text_quality, dedup_minhash_lsh): the r13 driver sample landed on none
-# of them, so their order-sensitive hash matches are builder-attested
-# only until the r14 sample re-signs them (VERDICT r13 item 3) — then
-# (b) the AUTO front from BEHAVIOR_CHANGED_SINCE (all satisfied after
-# r13), then (c) every signed entry oldest driver signature first,
-# alphabetical within a round. The r14 sample burns the remaining r7
-# cohort — after the r14 driver lands, no signature predates r8.
-# tools/freshness_report.py audits this file against CORRECTNESS_r*.json
-# and tests/test_freshness.py fails the build if the debt can't fit the
-# budget or the tail regrows.
-_VERIFY_FIRST: tuple[str, ...] = (
-    "pipeline_quantile_match",
-    "sample_hash",
-    "scalar_functions",
-    "sim_ivf_recall",
-    "sim_ivfpq_adc",
-    "sim_opq_recall",
-    "sim_pq_recall",
-    "sim_tfidf_recall",
-    "sim_tfidf_sparse",
-    "sim_topk_lsh",
-    "sim_topk_lsh_multiprobe",
-    "sort_top_k",
-    "sql_recursive_cte",
-    "subquery_correlated",
-    "subquery_scalar",
-    "table_delete_vectors",
-    "text_lang_id",
-    "text_tokens",
-    "tpch_q12_conditional",
-    "tpch_q13",
-    "tpch_q14_promo",
-    "tpch_q17_small_qty",
-    "tpch_q18_having",
-    "tpch_q4_exists",
-    "tpch_q6",
-    "window_distribution",
-    "agg_variance_exact",
-    "array_set_ops",
-    "constraint_report",
-    "dedup_clusters_star",
-    "dedup_minhash_capped",
-    "graph_triangles",
-    "higher_order_funcs",
-    "incremental_hll",
-    "join_broadcast",
-    "join_left",
-    "join_salted",
-    "join_semi",
-    "multimodal_decode",
-    "parity_aggregate",
-    "parity_filtered_aggregate",
-    "parity_filtered_scan",
-    "parity_full_scan",
-    "parity_group_by",
-    "parity_group_by_money",
-    "parity_projection",
-    "pipeline_contamination",
-    "pipeline_corpus_report",
-    "pipeline_curate",
-    "pipeline_pack_sequences",
-    "py_grouped_map",
-    "py_udtf_tokens",
-    "py_vectorized_dot",
-    "sample_per_group",
-    "scalar_functions2",
-    "set_ops_all",
-    "sim_tfidf_recall_zipf",
-    "sim_topk_ivf",
-    "sketch_heavy_hitters",
-    "source_xml",
-    "sql_collation",
-    "sql_scripting",
-    "stream_state_inspect",
-    "table_time_travel",
-    "text_fingerprint",
-    "text_pii",
-    "text_winnow",
-    "tpch_q10_returns",
-    "tpch_q15_top_supplier",
-    "tpch_q19_disjunct",
-    "tpch_q20_dominant",
-    "tpch_q2_mincost",
-    "tpch_q3_shipping",
-    "tpch_q7_volume",
-    "window_frames",
-    "batch_sessionize",
-    "chunk_documents",
-    "dedup_lines_global",
-    "events_attribution",
-    "events_funnel",
-    "events_gap_report",
-    "events_key_skew",
-    "events_retention_cohorts",
-    "events_rolling_active",
-    "events_zorder_pruned",
-    "gopher_quality",
-    "incremental_quantiles",
-    "join_asof",
-    "join_asof_nearest",
-    "join_bucketed",
-    "join_full_outer",
-    "join_interval_overlap",
-    "json_extract",
-    "kmeans_assign",
-    "kmeans_update",
-    "multimodal_audio_features",
-    "multimodal_image_resize",
-    "outlier_orders",
-    "pagerank",
-    "pipeline_dataset_card",
-    "pipeline_mixture_sample",
-    "pipeline_split_leakage",
-    "regression_price_trend",
-    "rollup_time_hierarchy",
-    "sim_ivfpq_recall",
-    "sort_paginate",
-    "source_col_native",
-    "source_formats",
-    "table_merge",
-    "table_profile",
-    "text_repetition",
-    "text_tfidf_terms",
-    "token_histogram",
-    "tpch_q11_important_stock",
-    "tpch_q16_supplier_cnt",
-    "tpch_q21_waiting",
-    "tpch_q22_global_sales",
-    "tpch_q5_local_volume",
-    "tpch_q8_market_share",
-    "tpch_q9_profit",
-    "unpivot_measures",
-    "window_first_last",
-    "basket_rules",
-    "bpe_encode",
-    "bpe_train",
-    "date_arithmetic",
-    "dedup_keep_best",
-    "dedup_semantic",
-    "distinct_pairs",
-    "events_ab_test",
-    "events_anomaly_mad",
-    "events_ewma",
-    "events_gap_fill",
-    "events_markov",
-    "events_time_pruned",
-    "events_top_paths",
-    "events_winsorize",
-    "feature_bucketize",
-    "feature_correlations",
-    "graph_link_prediction",
-    "incremental_agg",
-    "join_fuzzy_match",
-    "join_plan_advisor",
-    "join_range",
-    "join_scd2_pit",
-    "kmeans_iterate",
-    "lineitem_vshape",
-    "pipeline_cap_advisor",
-    "sample_stratified",
-    "sample_weighted",
-    "scd2_segment_history",
-    "sim_rrf_fusion",
-    "stream_col_source",
-    "stream_dedup",
-    "stream_session_window",
-    "stream_sliding_window",
-    "stream_stateful",
-    "stream_stateful_multibatch",
-    "stream_static_join",
-    "stream_stream_full_join",
-    "stream_stream_join",
-    "stream_stream_left_join",
-    "stream_tumbling_append",
-    "stream_tumbling_window",
-    "stream_upsert",
-    "text_bm25",
-    "text_pmi_pairs",
-    "top_ngrams",
-    "window_lag",
-    "agg_skew_kurtosis",
-    "customers_mcnemar",
-    "dedup_keep_best_lsh",
-    "dedup_substring_spans",
-    "docs_hashed_features",
-    "docs_shard_rebalance",
-    "events_attribution_shapley",
-    "events_auc_value",
-    "events_calibration",
-    "events_ccf",
-    "events_conformal_band",
-    "events_did",
-    "events_exact_percentiles",
-    "events_interpolate_linear",
-    "events_isotonic_fit",
-    "events_ks_drift",
-    "events_percentiles_by_type",
-    "events_perceptron",
-    "events_pr_curve",
-    "events_psi_drift",
-    "events_target_encode_loo",
-    "events_woe_iv",
-    "geo_bbox_contains",
-    "geo_cell_density",
-    "geo_geohash_encode",
-    "join_fuzzy_qgram",
-    "metadata_scan",
-    "orders_benford",
-    "orders_pareto",
-    "part_hierarchy_closure",
-    "pipeline_end_to_end_advised",
-    "pipeline_negative_pairs",
-    "pivot_event_types",
-    "price_index_laspeyres",
-    "set_ops",
-    "sim_ivf_sq",
-    "sim_recall_report",
-    "sim_topk_int8",
-    "sort_order_by",
-    "source_vocab_overlap",
-    "stream_ewma",
-    "table_incremental_view",
-    "table_schema_evolution",
-    "table_snapshot_diff",
-    "text_heaps_law",
-    "text_token_entropy",
-    "text_unigram_lm",
-    "window_rank_dense",
-    "window_running_sum",
-    "agg_bitmap_distinct",
-    "agg_mode_exact",
-    "customers_abc",
-    "customers_cohort_ltv",
-    "customers_rfm",
-    "customers_survival_km",
-    "dedup_containment",
-    "dedup_incremental_ingest",
-    "dedup_ppjoin",
-    "embedding_label_drift",
-    "embedding_pca_power",
-    "events_ab_cuped",
-    "events_acf",
-    "events_bursts",
-    "events_entropy_profile",
-    "events_holt",
-    "events_latency_bands",
-    "events_seasonal_dow",
-    "events_stl_decompose",
-    "geo_nearest_supplier",
-    "geo_point_in_polygon",
-    "graph_bfs_distance",
-    "graph_clustering_coeff",
-    "join_bloom_pruned",
-    "lineitem_ols_normal",
-    "lineitem_weighted_median",
-    "market_hhi",
-    "multimodal_audio_vad",
-    "multimodal_dhash_neardup",
-    "orders_mann_kendall",
-    "orders_poisson_bootstrap",
-    "orders_pvm_bridge",
-    "orders_rolling_median",
-    "orders_runs_test",
-    "orders_theil_sen",
-    "pipeline_end_to_end",
-    "pipeline_end_to_end_auto",
-    "pipeline_funnel_report",
-    "sim_ivfpq_rerank",
-    "sim_jl_distortion",
-    "sim_kcenter_coreset",
-    "sketch_bloom_fpr",
-    "stream_pit_enrich",
-    "supplier_assortativity",
-    "supplier_communities",
-    "table_rollback",
-    "text_bigram_lm",
-    "text_rake_keywords",
-    "text_readability",
-    "text_zipf_fit",
-    "agg_approx_sketches",
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_grouping_sets",
-    "agg_percentiles",
-    "agg_rollup",
-    "cli_query_compiled",
-    "dedup_clusters",
-    "dedup_embedding",
-    "dedup_embedding_lsh",
-    "dedup_exact",
-    "dedup_lsh_recall",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "events_seasonal_strength",
-    "join_anti",
-    "join_multiway",
-    "multimodal_binaryfile_ingest",
-    "multimodal_frame_plan",
-    "orders_changepoint",
-    "orders_forecast_backtest",
-    "orders_mix_independence",
-    "orders_mom_growth",
-    "orders_open_backlog",
-    "orders_reconciliation",
-    "parts_abc_xyz_matrix",
-    "parts_xyz_classes",
-    "pipeline_mix_kl",
-    "pipeline_pit_features",
-    "pipeline_quality_cut",
-    "pipeline_score_normalize",
-    "pipeline_shard_plan",
-    "pipeline_temperature_mix",
-    "sim_knn_graph",
-    "sim_pq_adc",
-    "sim_topk_bruteforce",
-    "sketch_kmv_setops",
-    "sql_lateral_topk",
-    "sql_variant_extract",
-    "stream_kmv_distinct",
-    "stream_windowed_topk",
-    "supplier_gini",
-    "supplier_kcore",
-    "table_branch_promote",
-    "table_branches",
-    "text_quality",
-    "tpch_q1",
-    "window_topk_per_group",
-)
-
+# The checkout holding the driver's CORRECTNESS_r*.json signature files.
+_CHECKOUT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Machine-readable gate tiers (VERDICT r11 item 4). Gates listed here are
 # DELIBERATE EXACT AUDIT TIERS: they pay exact/all-pairs cost ON PURPOSE —
@@ -437,6 +112,161 @@ AUDIT_TIERS: dict[str, str] = {
 }
 
 
+# Entries whose BEHAVIOR changed after their newest driver signature.
+# Maintained by hand: when you rewrite a query's logic/output, add
+# name -> (first round whose driver signature covers the rewrite, why).
+# all_queries() puts the entry first, inside the driver's next sample,
+# until a CORRECTNESS row from that round (or later) exists; then it
+# clears by itself — no manual removal step to forget.
+BEHAVIOR_CHANGED_SINCE: dict[str, tuple[int, str]] = {
+    # r6 two_phase_rank_cumsum rewrites (signatures are r5, pre-rewrite;
+    # a signature from r7+ covers the rewritten code)
+    "customers_abc": (7, "r6 window rewrite (two_phase_rank_cumsum)"),
+    "supplier_gini": (7, "r6 window rewrite (two_phase_rank_cumsum)"),
+    "customers_rfm": (7, "r6 window rewrite (two_phase_rank_cumsum)"),
+    "pipeline_score_normalize": (
+        7,
+        "r6 window rewrite (two_phase_rank_cumsum)",
+    ),
+    # (the r6 2-token-blocking entry for join_fuzzy_match — long
+    # satisfied — was removed when the r10 entry below superseded it:
+    # duplicate dict keys silently shadow, ruff-flagged)
+    # r8: the r7 driver-red query — ssr_r/sst_r (round(double,2) of
+    # ~1e21 sums, cross-engine-divergent at digit 16) replaced by
+    # integer-quantized ssr_q/sst_q (VERDICT r7 item 1)
+    "events_seasonal_strength": (
+        8,
+        "r8 integer quantization of ssr/sst outputs (r7 hash fail fix)",
+    ),
+    # r8 full-repr sweep fallout: avg emitted via decimal division then
+    # cast — the decimal-division rounding path differs from DuckDB's in
+    # the last ulp; rewritten as cast-then-IEEE-divide (bit-identical)
+    "tpch_q1": (8, "r8 avg_price cast-then-divide rewrite"),
+    "tpch_q17_small_qty": (8, "r8 avg_yearly cast-then-divide rewrite"),
+    # r9: trained k-means IVF directory rows added to the grid (VERDICT
+    # r8 item 4); schema changed (directory column, probe_flips -> probe)
+    # r10: production-cell-count rows added (VERDICT r9 item 1) —
+    # trained 64-cell/nprobe-16 and 256-cell/nprobe-64; 60 -> 80 rows
+    "sim_ivfpq_recall": (
+        10,
+        "r10 trained rows at 64/256 cells (VERDICT r9 item 1)",
+    ),
+    # r10: length-bucket block sharding in fuzzy_best_match (the sf1
+    # rehearsal's 0-rows cliff fix) — output value-identical at driver
+    # SFs (re-verified green at sf0.01 + sf0.1 the day it landed), plan
+    # rewrite nonetheless → re-sign first
+    "join_fuzzy_match": (
+        11,
+        "r10 length-bucket block sharding (sf1 0-rows cliff fix) + r11 "
+        "distinct-name collapse rewrite (value-identical at driver SFs, "
+        "brute-force-verified; fixes a silent sf1 cap-drop recall loss) "
+        "and the ADVICE r10 __lb >= 0 probe filter",
+    ),
+    # r12: the shipped recommended operating points + ADVICE r11 fixes
+    "dedup_keep_best_lsh": (
+        12,
+        "r12 threshold-matched operating point (est>=0.8, 64 hashes / 16 "
+        "bands — VERDICT r11 item 2); output changes by design (tighter "
+        "threshold -> fewer clusters), oracle re-pointed in step",
+    ),
+    "join_fuzzy_qgram": (
+        12,
+        "r12 length-class fallback for the ED-Join no-guarantee regime "
+        "(ADVICE r11) + oracle document frequency recomputed over "
+        "DISTINCT NAMES to match the implementation (ADVICE r11); "
+        "output value-identical at driver SFs (cross-generator symdiff "
+        "0), blocking + oracle rewrite nonetheless",
+    ),
+    "pipeline_end_to_end_advised": (
+        12,
+        "r12 census moved inside minhash_lsh_pairs over cached "
+        "signatures (one corpus pass — VERDICT r11 item 3); output "
+        "value-identical (45 rows sf0.01, oracle green), plan rewrite "
+        "nonetheless",
+    ),
+    "text_heaps_law": (
+        12,
+        "r12 OLS fit as window aggregates (kills the duplicated pts "
+        "subtree / second explode) + n_tris from token count instead of "
+        "size(tris) (kills the second tokenization pass) — VERDICT r11 "
+        "item 5, sf1 ratio 3.90x -> 1.66x; output value-identical, "
+        "oracle green, plan rewrite nonetheless",
+    ),
+    # r13: the proven-better default flipped on (VERDICT r12 item 2) —
+    # e2e_stage_frames / e2e_funnel_flags default bucket cap is now
+    # census-advised, and the three gates that consumed the old pinned
+    # cap=4 default (end_to_end, _auto, funnel_report) + their oracles
+    # moved with it. Output CHANGES BY DESIGN (sf0.01 span gate 42 ->
+    # 45 rows: the advised cap pairs buckets the pinned cap truncated,
+    # shifting which docs reach the mixture); oracles recompute the
+    # same census, local re-check ALL GREEN at sf0.01.
+    "pipeline_end_to_end": (
+        13,
+        "r13 default bucket cap pinned-4 -> census-advised (VERDICT r12 "
+        "item 2); oracle re-pointed to the advised CTE chain",
+    ),
+    "pipeline_end_to_end_auto": (
+        13,
+        "r13 default bucket cap pinned-4 -> census-advised + mkdtemp "
+        "scratch dir (ADVICE r12); oracle re-pointed to the advised CTE",
+    ),
+    "pipeline_funnel_report": (
+        13,
+        "r13 e2e_funnel_flags default cap pinned-4 -> census-advised so "
+        "the observability report tracks the production funnel; oracle "
+        "re-pointed to the advised CTE chain",
+    ),
+    # r13 continuation: the v4 rehearsal fixture (embeddings finally
+    # replicated) exposed the JL audit's pair sample as corpus-
+    # proportional (36.9x wall at 10x data); bounded to 50 smallest
+    # vids per modulus class, oracle bounded identically. Output
+    # value-identical at sf0.01 (exactly 50 ids per class there);
+    # CHANGES at sf0.1 (was 200x200 pairs, now 50x50).
+    "sim_jl_distortion": (
+        13,
+        "r13 size-bounded 50x50 audit sample (v4 fixture exposed the "
+        "corpus-proportional %10 sample: 36.9x at 10x); oracle bounded "
+        "in step",
+    ),
+}
+
+
+def load_signatures() -> dict[str, tuple[int, bool]]:
+    """name -> (newest round that checked it, that check passed), read from
+    the checkout's ``CORRECTNESS_r*.json`` once per process. Without those
+    files (an installed package) no gate is signed."""
+    return dict(_signatures_in(_CHECKOUT))
+
+
+@functools.cache
+def _signatures_in(root: str) -> dict[str, tuple[int, bool]]:
+    sigs: dict[str, tuple[int, bool]] = {}
+    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        try:
+            rows = json.load(open(path))
+        except (json.JSONDecodeError, OSError):
+            continue
+        if not isinstance(rows, dict):
+            continue
+        for name, row in rows.items():
+            if not isinstance(row, dict):
+                continue
+            ok = bool(
+                row.get("rows_match")
+                and row.get("schema_match") is not False
+                and row.get("hash_match") is not False
+                and not row.get("err")
+            )
+            prev = sigs.get(name)
+            if prev is None or rnd >= prev[0]:
+                sigs[name] = (rnd, ok)
+    return sigs
+
+
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for m in _MODULES:
@@ -444,9 +274,22 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if dup:
             raise ValueError(f"duplicate query names across workloads: {dup}")
         merged.update(m.QUERIES)
-    out = {n: merged[n] for n in _VERIFY_FIRST if n in merged}
-    out.update({n: fn for n, fn in merged.items() if n not in out})
-    return out
+    return {n: merged[n] for n in _verify_order(list(merged))}
+
+
+def _verify_order(names: list[str]) -> list[str]:
+    """The order the driver verifies gates in (it samples the first ~50).
+    First every gate that is due: never signed, or rewritten after its
+    newest signature (``BEHAVIOR_CHANGED_SINCE``), in registry order. Then
+    every other gate, oldest signature first, alphabetical within a round.
+    """
+    sigs = load_signatures()
+
+    def due(n: str) -> bool:
+        return n not in sigs or sigs[n][0] < BEHAVIOR_CHANGED_SINCE.get(n, (0,))[0]
+
+    rest = sorted((n for n in names if not due(n)), key=lambda n: (sigs[n][0], n))
+    return [n for n in names if due(n)] + rest
 
 
 def all_oracles() -> dict[str, str]:

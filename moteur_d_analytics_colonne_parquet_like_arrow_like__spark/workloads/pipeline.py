@@ -6,6 +6,10 @@ stopword profiles, token regex) with the Spark operators, and both sides use
 the md5-based stable hash family — so sketch outputs (MinHash signatures,
 SimHash fingerprints) are bit-identical across engines, not just
 approximately similar.
+
+``sim_topk_ivf`` shares ``sim_topk_lsh``'s oracle: the same single-probe LSH
+top-k, but read from an on-disk layout partitioned by bucket and probed with
+partition pruning, so the gate pins the physical layout to the logical form.
 """
 
 from __future__ import annotations

@@ -3,6 +3,10 @@ scoring (the CCNet perplexity-bucket proxy), within-document token
 entropy, and quality-aware near-dup cluster resolution (keep the BEST
 copy, not the first). Extends workloads/pipeline.py; shares its SQL
 helpers so the oracle constants stay single-sourced.
+
+``pipeline_end_to_end_auto`` shares ``pipeline_end_to_end``'s oracle: the same
+funnel with each stage allowed to materialize to parquet and be re-read
+(``materialize="auto"``), so its match shows materialization changes no value.
 """
 
 from __future__ import annotations

@@ -11,6 +11,10 @@ ACF/changepoint avoid float accumulation entirely by n-scaling the
 mean-centered series into BIGINT arithmetic (dev_t = n*x_t - S is the
 exact integer n-multiple of x_t - mean, and the scale factors cancel in
 every reported ratio).
+
+``sql_recursive_cte`` and analytics' ``part_hierarchy_closure`` compute one
+ancestor closure under one oracle: this gate runs Spark's WITH RECURSIVE
+(unknown depth), that one unrolled level-joins (known depth, the scale path).
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..operators import graph
 from ..sources.catalog import load_table, table_path
+from . import analytics
 from ._scratch import derived
 
 
@@ -1159,26 +1164,10 @@ ORACLES["sql_collation"] = """
     FROM mixed
 """
 
-# Same recursion as part_hierarchy_closure's oracle: the two Spark
-# strategies (genuine recursion here, unrolled joins there) must both
-# equal DuckDB's recursive evaluation.
-ORACLES["sql_recursive_cte"] = """
-    WITH RECURSIVE e AS (
-        SELECT p_partkey AS child, p_partkey // 10 AS parent
-        FROM part WHERE p_partkey >= 1 AND p_partkey // 10 >= 1
-    ),
-    clo AS (
-        SELECT child AS node, parent AS anc, 1 AS dist FROM e
-        UNION ALL
-        SELECT clo.node, e.parent, clo.dist + 1
-        FROM clo JOIN e ON e.child = clo.anc
-    )
-    SELECT dist, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(COUNT(DISTINCT anc) AS BIGINT) AS n_ancestors,
-           CAST(MIN(node) AS BIGINT) AS min_node,
-           CAST(MAX(node) AS BIGINT) AS max_node
-    FROM clo GROUP BY dist ORDER BY dist
-"""
+# The two Spark strategies (genuine recursion here, unrolled joins in
+# part_hierarchy_closure) must both equal DuckDB's recursive evaluation,
+# so they share one oracle.
+ORACLES["sql_recursive_cte"] = analytics.ORACLES["part_hierarchy_closure"]
 
 ORACLES["sql_lateral_topk"] = """
     SELECT o.o_orderkey, t.l_linenumber,

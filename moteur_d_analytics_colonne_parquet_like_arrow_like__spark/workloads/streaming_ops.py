@@ -6,6 +6,10 @@ Executing through the real streaming engine (state store, watermarks,
 micro-batch planner) and comparing to batch SQL is exactly the equivalence
 Structured Streaming promises — a strong correctness check for the
 streaming operator surface.
+
+``stream_stateful`` and ``stream_stateful_multibatch`` check the same running
+per-user stats: the first in one micro-batch, the second over 8 real
+micro-batches, so state must survive every batch boundary.
 """
 
 from __future__ import annotations

@@ -39,8 +39,8 @@ def test_stale_signatures_lead_the_sample(report):
     # debt — it MUST be inside the next driver sample so it gets re-signed
     # immediately.
     assert report["behavior_changed_outside_sample"] == [], (
-        "behavior-changed entries must be re-signed next round; move them "
-        "to the front of workloads._VERIFY_FIRST"
+        "behavior-changed entries must be re-signed next round; more gates "
+        "are due than one driver sample holds"
     )
 
 
@@ -93,7 +93,7 @@ def test_signature_tail_cannot_regrow(report):
     # the steady-state age with priority items (red fixes, behavior
     # changes, new registrations) jumping the queue inside that cycle. The r6 order's explicit schedule (after r8 no
     # signature predates r2, after r9 none predates r3) is tighter than
-    # this floor and is carried by the _VERIFY_FIRST ordering itself;
+    # this floor and is carried by the derived verify order itself;
     # this assertion is the backstop that keeps the tail from regrowing
     # after that schedule completes.
     rounds = [
@@ -117,8 +117,8 @@ def test_signature_tail_cannot_regrow(report):
     ]
     assert too_old == [], (
         f"{len(too_old)} entries signed before r{floor} sit outside the "
-        f"next driver sample: {too_old[:10]}... — move them up in "
-        "workloads._VERIFY_FIRST"
+        f"next driver sample: {too_old[:10]}... — more old signatures "
+        "than one driver sample can re-sign"
     )
     # r10 tightening (VERDICT r9 item 2): the in-sample rule above means
     # a floor-aged entry gets re-signed next round, so with the registry

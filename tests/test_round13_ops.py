@@ -1,12 +1,16 @@
 """Round-13 tests: the ANN re-rank rung's dominance/equality contracts
 (VERDICT r12 item 4), the census-advised default for the e2e curation
-composition (VERDICT r12 item 2), and the mechanical _VERIFY_FIRST
-regeneration tool (VERDICT r12 item 1)."""
+composition (VERDICT r12 item 2), and the verification order that
+``workloads.all_queries()`` derives from the driver's signatures."""
 
 from __future__ import annotations
 
+import glob
 import importlib.util
+import json
 import os
+import re
+import shutil
 
 from pyspark.sql import functions as F
 
@@ -181,63 +185,70 @@ def test_e2e_default_cap_is_advised(spark, sf_dir):
     assert d == a and d
 
 
-# ------------------------------- gen_verify_first (VERDICT r12 #1)
+# --------------------------------------------- derived verify order
 
 
-def _load_tool(name):
-    spec = importlib.util.spec_from_file_location(
-        name, os.path.join(REPO, "tools", f"{name}.py")
-    )
+def _load_module(path):
+    name = os.path.splitext(os.path.basename(path))[0]
+    spec = importlib.util.spec_from_file_location(name, path)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
-def test_gen_verify_first_front_then_oldest():
-    """compute_order puts --front names first (in the given order),
-    follows with the AUTO front (stale behavior-changed entries +
-    never-signed registrations, so a forgotten --front cannot sort a
-    behavior-changed entry out of the driver sample), the result is a
-    permutation of the live registry, and the remaining tail is sorted
-    by (newest driver signature round, name) — the mechanical form of
-    the burn-down rule the freshness backstop enforces."""
-    tool = _load_tool("gen_verify_first")
-    fr = _load_tool("freshness_report")
+def test_verify_order_front_then_oldest():
+    """all_queries() is a permutation of the registry; the gates that are
+    due (never signed, or rewritten after their newest signature) come
+    first in registry order; the rest is sorted by (newest driver
+    signature round, name) — the burn-down rule the freshness backstop
+    enforces."""
     from moteur_d_analytics_colonne_parquet_like_arrow_like__spark import (
         workloads,
     )
 
-    registry = list(workloads.all_queries())
-    front = [registry[5], registry[0]]
-    order = tool.compute_order(front)
-    assert order[:2] == front
+    registry = [n for m in workloads._MODULES for n in m.QUERIES]
+    order = list(workloads.all_queries())
     assert sorted(order) == sorted(registry)
-    sigs = fr.load_signatures()
-    auto = [
+    sigs = workloads.load_signatures()
+    changed = workloads.BEHAVIOR_CHANGED_SINCE
+    due = [
         n
         for n in registry
-        if n not in set(front)
-        and (
-            n not in sigs
-            or (
-                n in fr.BEHAVIOR_CHANGED_SINCE
-                and sigs[n][0] < fr.BEHAVIOR_CHANGED_SINCE[n][0]
-            )
-        )
+        if n not in sigs or (n in changed and sigs[n][0] < changed[n][0])
     ]
-    assert order[2 : 2 + len(auto)] == auto
-    keys = [
-        (sigs.get(n, (-1, False))[0], n)
-        for n in order[2 + len(auto) :]
-    ]
+    assert order[: len(due)] == due
+    keys = [(sigs[n][0], n) for n in order[len(due) :]]
     assert keys == sorted(keys)
 
 
-def test_gen_verify_first_rejects_unknown_front():
-    tool = _load_tool("gen_verify_first")
-    try:
-        tool.compute_order(["definitely_not_a_gate"])
-    except SystemExit as e:
-        assert "not in registry" in str(e)
-    else:  # pragma: no cover
-        raise AssertionError("unknown --front name must be rejected")
+def test_verify_order_follows_next_round_signatures(tmp_path, monkeypatch):
+    """The order is recomputed from whatever signatures the checkout holds:
+    once the next driver round signs today's first 50 gates, the signature
+    tail still fits the sample with nothing regenerated by hand, and a
+    newly registered (never signed) gate lands inside the next sample."""
+    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark import (
+        workloads,
+    )
+
+    fr = _load_module(os.path.join(REPO, "tools", "freshness_report.py"))
+    freshness = _load_module(os.path.join(REPO, "tests", "test_freshness.py"))
+    sample = list(workloads.all_queries())[: fr.DRIVER_SAMPLE]
+    rounds = [0]
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path)
+        rounds.append(int(re.search(r"_r(\d+)\.json$", path).group(1)))
+    signed = {
+        n: {"rows_match": True, "schema_match": True, "hash_match": True}
+        for n in sample
+    }
+    next_file = tmp_path / f"CORRECTNESS_r{max(rounds) + 1:02d}.json"
+    next_file.write_text(json.dumps(signed))
+    monkeypatch.setattr(workloads, "_CHECKOUT", str(tmp_path))
+
+    freshness.test_signature_tail_cannot_regrow(fr.build_report())
+
+    monkeypatch.setitem(
+        workloads.streaming_ops.QUERIES, "zz_unsigned_gate", lambda spark, sf: None
+    )
+    order = list(workloads.all_queries())
+    assert order.index("zz_unsigned_gate") < fr.DRIVER_SAMPLE

@@ -293,8 +293,9 @@ def test_publish_swap_recovers_displaced_state(tmp_path):
 
 
 def test_kmv_merge_leaves_no_checkpoint(spark, sf_dir, tmp_path):
-    # Each foreach_batch_kmv_merge call checkpoints under a fresh name, so
-    # the checkpoint can never be resumed; the call must delete it.
+    # Each foreachBatch sink call (foreach_batch_kmv_merge, then
+    # foreach_batch_upsert) checkpoints under a fresh name, so the
+    # checkpoint can never be resumed; the call must delete it.
     import glob
     import tempfile
 
@@ -302,10 +303,22 @@ def test_kmv_merge_leaves_no_checkpoint(spark, sf_dir, tmp_path):
 
     roots = {S._volatile_ckpt_root(), tempfile.gettempdir(), "/tmp"}
 
-    def ckpts():
-        return {p for r in roots for p in glob.glob(os.path.join(r, "ckpt_kmv_*"))}
+    def ckpts(prefix):
+        return {p for r in roots for p in glob.glob(os.path.join(r, f"{prefix}_*"))}
 
-    before = ckpts()
+    before = ckpts("ckpt_kmv")
     sk = streaming_ops._kmv_stream_sketch(spark, sf_dir, str(tmp_path / "sk"))
     assert sk.count() > 0
-    assert ckpts() - before == set()
+    assert ckpts("ckpt_kmv") - before == set()
+
+    before = ckpts("ckpt_upsert")
+    path = str(tmp_path / "upsert")
+    S.foreach_batch_upsert(
+        S.events_stream(spark, sf_dir).select("user_id", "event_id", "ts"),
+        path,
+        keys=["user_id"],
+        order_cols=["ts", "event_id"],
+        num_buckets=4,
+    )
+    assert spark.read.parquet(path).count() > 0
+    assert ckpts("ckpt_upsert") - before == set()

@@ -9,11 +9,11 @@ tests/test_freshness.py turns its invariants into build failures:
 
   * never-driver-checked entries must fit the upcoming driver sample, i.e.
     every never-checked entry must sit inside the first DRIVER_SAMPLE names
-    of all_queries() (which is ordered by workloads._VERIFY_FIRST);
+    of all_queries() (whose order workloads derives from these signatures);
   * no entry's newest signature may be a FAIL (latest check red);
-  * the behavior-changed list below (hand-maintained when a query's output
-    or plan is rewritten after its newest signature) must also sit inside
-    the sample.
+  * the entries of workloads.BEHAVIOR_CHANGED_SINCE (hand-maintained when a
+    query's output or plan is rewritten after its newest signature) must
+    also sit inside the sample.
 
 Usage:
   python tools/freshness_report.py            # human table + summary
@@ -36,155 +36,13 @@ from collections import Counter
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from moteur_d_analytics_colonne_parquet_like_arrow_like__spark import (  # noqa: E402
+    workloads,
+)
+
 # The driver verifies roughly this many entries per round (observed: 50 in
 # r3-r6). Used as the budget the never-checked backlog must fit within.
 DRIVER_SAMPLE = 50
-
-# Entries whose BEHAVIOR changed after their newest driver signature.
-# Maintained by hand: when you rewrite a query's logic/output, add
-# name -> (first round whose driver signature covers the rewrite, why).
-# The entry AUTO-CLEARS once a CORRECTNESS row from that round (or later)
-# exists — no manual removal step to forget.
-BEHAVIOR_CHANGED_SINCE: dict[str, tuple[int, str]] = {
-    # r6 two_phase_rank_cumsum rewrites (signatures are r5, pre-rewrite;
-    # a signature from r7+ covers the rewritten code)
-    "customers_abc": (7, "r6 window rewrite (two_phase_rank_cumsum)"),
-    "supplier_gini": (7, "r6 window rewrite (two_phase_rank_cumsum)"),
-    "customers_rfm": (7, "r6 window rewrite (two_phase_rank_cumsum)"),
-    "pipeline_score_normalize": (
-        7,
-        "r6 window rewrite (two_phase_rank_cumsum)",
-    ),
-    # (the r6 2-token-blocking entry for join_fuzzy_match — long
-    # satisfied — was removed when the r10 entry below superseded it:
-    # duplicate dict keys silently shadow, ruff-flagged)
-    # r8: the r7 driver-red query — ssr_r/sst_r (round(double,2) of
-    # ~1e21 sums, cross-engine-divergent at digit 16) replaced by
-    # integer-quantized ssr_q/sst_q (VERDICT r7 item 1)
-    "events_seasonal_strength": (
-        8,
-        "r8 integer quantization of ssr/sst outputs (r7 hash fail fix)",
-    ),
-    # r8 full-repr sweep fallout: avg emitted via decimal division then
-    # cast — the decimal-division rounding path differs from DuckDB's in
-    # the last ulp; rewritten as cast-then-IEEE-divide (bit-identical)
-    "tpch_q1": (8, "r8 avg_price cast-then-divide rewrite"),
-    "tpch_q17_small_qty": (8, "r8 avg_yearly cast-then-divide rewrite"),
-    # r9: trained k-means IVF directory rows added to the grid (VERDICT
-    # r8 item 4); schema changed (directory column, probe_flips -> probe)
-    # r10: production-cell-count rows added (VERDICT r9 item 1) —
-    # trained 64-cell/nprobe-16 and 256-cell/nprobe-64; 60 -> 80 rows
-    "sim_ivfpq_recall": (
-        10,
-        "r10 trained rows at 64/256 cells (VERDICT r9 item 1)",
-    ),
-    # r10: length-bucket block sharding in fuzzy_best_match (the sf1
-    # rehearsal's 0-rows cliff fix) — output value-identical at driver
-    # SFs (re-verified green at sf0.01 + sf0.1 the day it landed), plan
-    # rewrite nonetheless → re-sign first
-    "join_fuzzy_match": (
-        11,
-        "r10 length-bucket block sharding (sf1 0-rows cliff fix) + r11 "
-        "distinct-name collapse rewrite (value-identical at driver SFs, "
-        "brute-force-verified; fixes a silent sf1 cap-drop recall loss) "
-        "and the ADVICE r10 __lb >= 0 probe filter",
-    ),
-    # r12: the shipped recommended operating points + ADVICE r11 fixes
-    "dedup_keep_best_lsh": (
-        12,
-        "r12 threshold-matched operating point (est>=0.8, 64 hashes / 16 "
-        "bands — VERDICT r11 item 2); output changes by design (tighter "
-        "threshold -> fewer clusters), oracle re-pointed in step",
-    ),
-    "join_fuzzy_qgram": (
-        12,
-        "r12 length-class fallback for the ED-Join no-guarantee regime "
-        "(ADVICE r11) + oracle document frequency recomputed over "
-        "DISTINCT NAMES to match the implementation (ADVICE r11); "
-        "output value-identical at driver SFs (cross-generator symdiff "
-        "0), blocking + oracle rewrite nonetheless",
-    ),
-    "pipeline_end_to_end_advised": (
-        12,
-        "r12 census moved inside minhash_lsh_pairs over cached "
-        "signatures (one corpus pass — VERDICT r11 item 3); output "
-        "value-identical (45 rows sf0.01, oracle green), plan rewrite "
-        "nonetheless",
-    ),
-    "text_heaps_law": (
-        12,
-        "r12 OLS fit as window aggregates (kills the duplicated pts "
-        "subtree / second explode) + n_tris from token count instead of "
-        "size(tris) (kills the second tokenization pass) — VERDICT r11 "
-        "item 5, sf1 ratio 3.90x -> 1.66x; output value-identical, "
-        "oracle green, plan rewrite nonetheless",
-    ),
-    # r13: the proven-better default flipped on (VERDICT r12 item 2) —
-    # e2e_stage_frames / e2e_funnel_flags default bucket cap is now
-    # census-advised, and the three gates that consumed the old pinned
-    # cap=4 default (end_to_end, _auto, funnel_report) + their oracles
-    # moved with it. Output CHANGES BY DESIGN (sf0.01 span gate 42 ->
-    # 45 rows: the advised cap pairs buckets the pinned cap truncated,
-    # shifting which docs reach the mixture); oracles recompute the
-    # same census, local re-check ALL GREEN at sf0.01.
-    "pipeline_end_to_end": (
-        13,
-        "r13 default bucket cap pinned-4 -> census-advised (VERDICT r12 "
-        "item 2); oracle re-pointed to the advised CTE chain",
-    ),
-    "pipeline_end_to_end_auto": (
-        13,
-        "r13 default bucket cap pinned-4 -> census-advised + mkdtemp "
-        "scratch dir (ADVICE r12); oracle re-pointed to the advised CTE",
-    ),
-    "pipeline_funnel_report": (
-        13,
-        "r13 e2e_funnel_flags default cap pinned-4 -> census-advised so "
-        "the observability report tracks the production funnel; oracle "
-        "re-pointed to the advised CTE chain",
-    ),
-    # r13 continuation: the v4 rehearsal fixture (embeddings finally
-    # replicated) exposed the JL audit's pair sample as corpus-
-    # proportional (36.9x wall at 10x data); bounded to 50 smallest
-    # vids per modulus class, oracle bounded identically. Output
-    # value-identical at sf0.01 (exactly 50 ids per class there);
-    # CHANGES at sf0.1 (was 200x200 pairs, now 50x50).
-    "sim_jl_distortion": (
-        13,
-        "r13 size-bounded 50x50 audit sample (v4 fixture exposed the "
-        "corpus-proportional %10 sample: 36.9x at 10x); oracle bounded "
-        "in step",
-    ),
-}
-
-
-def load_signatures() -> dict[str, tuple[int, bool]]:
-    """name -> (newest round that checked it, that check passed)."""
-    sigs: dict[str, tuple[int, bool]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            rows = json.load(open(path))
-        except (json.JSONDecodeError, OSError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            ok = bool(
-                row.get("rows_match")
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-                and not row.get("err")
-            )
-            prev = sigs.get(name)
-            if prev is None or rnd >= prev[0]:
-                sigs[name] = (rnd, ok)
-    return sigs
 
 
 def load_sweep_coverage() -> dict[str, set[str]]:
@@ -212,18 +70,14 @@ def load_sweep_coverage() -> dict[str, set[str]]:
 
 
 def build_report() -> dict:
-    from moteur_d_analytics_colonne_parquet_like_arrow_like__spark import (
-        workloads,
-    )
-
-    registry = list(workloads.all_queries())  # _VERIFY_FIRST order
+    registry = list(workloads.all_queries())  # verification order
     oracles = workloads.all_oracles()
-    sigs = load_signatures()
+    sigs = workloads.load_signatures()
 
     entries = []
     for pos, name in enumerate(registry):
         sig = sigs.get(name)
-        changed = BEHAVIOR_CHANGED_SINCE.get(name)
+        changed = workloads.BEHAVIOR_CHANGED_SINCE.get(name)
         stale_why = None
         if changed is not None:
             needs_round, why = changed
@@ -309,7 +163,7 @@ def render_markdown(rep: dict) -> str:
         "# Verification freshness report",
         "",
         "Generated by `tools/freshness_report.py` — joins the live registry",
-        "(`workloads.all_queries()`, ordered by `_VERIFY_FIRST`) against every",
+        "(`workloads.all_queries()`, in its derived verification order) against every",
         "`CORRECTNESS_r*.json`. `tests/test_freshness.py` enforces the",
         "invariants; regenerate with `python tools/freshness_report.py --write`.",
         "",
