@@ -11,6 +11,7 @@ are engine-private.
 from __future__ import annotations
 
 import random
+from collections.abc import Callable
 
 from pyspark.sql import Column, functions as F
 
@@ -57,21 +58,39 @@ def words(col: str | Column) -> Column:
     return F.split(normalize_text(col), " ")
 
 
+def ngrams(
+    tokens: Column,
+    n: int,
+    gram: Callable[[Column], Column] = lambda s: F.concat_ws(" ", s),
+) -> Column:
+    """Ordered, duplicate-keeping n-grams of an array expression:
+    ``gram(window)`` for every window of ``n`` consecutive elements, in
+    position order; empty when there are fewer than ``n`` (or the array is
+    null). ``gram`` defaults to space-joining the window.
+
+    A lambda may reference per-row values only through a lambda variable
+    or a plain column. Spark evaluates a lambda body once per element, so
+    an expression such as ``words(text)`` referenced inside it re-runs its
+    regex and split over the whole row for every position: O(len²) per
+    row. Here ``tokens`` is evaluated once, bound by a one-element
+    ``transform``, and the position lambda sees only that variable.
+    """
+
+    def windows(w: Column) -> Column:
+        # one element per window start; the lambda's index i is its offset
+        starts = F.slice(w, 1, F.greatest(F.size(w) - (n - 1), F.lit(0)))
+        return F.transform(starts, lambda _, i: gram(F.slice(w, i + 1, n)))
+
+    return F.transform(F.array(F.coalesce(tokens, F.array())), windows)[0]
+
+
 def word_shingles(col: str | Column, k: int = 3) -> Column:
     """Distinct k-word shingles of a text column (empty array if < k words).
 
-    Pure Catalyst: transform over a sequence of start offsets + slice.
-    """
-    w = words(col)
-    return F.array_distinct(
-        F.when(
-            F.size(w) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - (k - 1)),
-                lambda i: F.concat_ws(" ", F.slice(w, i, k)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
+    Built by :func:`ngrams`, so the text is tokenized once per row: a
+    lambda may reference per-row values only through a lambda variable or
+    a plain column, never through an expression such as ``words(col)``."""
+    return F.array_distinct(ngrams(words(col), k))
 
 
 def as_double_array(col: str | Column) -> Column:

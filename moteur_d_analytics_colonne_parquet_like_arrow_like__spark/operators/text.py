@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions import normalize_text, stable_hash31, stable_hash60, word_shingles, words
+from ..functions import ngrams, normalize_text, stable_hash31, stable_hash60, word_shingles, words
 
 # Tiny stopword profiles per language. Chosen for SQL portability, not
 # linguistic excellence; the operator contract is the scoring rule.
@@ -198,35 +198,19 @@ def winnow_fingerprints(
     length ≥ window+k−1 yields ≥1 shared fingerprint, and fingerprint
     density is ~2/(window+1) — tunable storage vs sensitivity.
 
-    Pure Catalyst (sequence/slice/array_min lambda folds); fingerprints are
+    Pure Catalyst (``ngrams`` windows folded by array_min); fingerprints are
     emitted sorted and comma-joined for cross-engine comparison."""
-    ws = words(text_col)
     # ordered, duplicate-preserving shingle hashes (word_shingles dedups —
-    # winnowing needs the positional sequence)
-    shingles = F.when(
-        F.size(ws) >= shingle_k,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - (shingle_k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(ws, i, shingle_k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    # STAGE the hash array as a real column before the window pass: inlining
-    # it into the window lambda re-evaluates the whole md5 array once PER
-    # WINDOW (O(shingles²) hashing — measured ~20× slower); a column
-    # reference is computed once per row.
-    staged = df.withColumn("__win_hs", F.transform(shingles, lambda s: stable_hash31(s)))
-    hs = F.col("__win_hs")
-    n = F.size(hs)
-    # guard: sequence(1, 0) in Spark yields [1, 0] (descending!), so the
-    # fewer-hashes-than-window case must short-circuit to an empty array.
-    wins = F.when(
-        n >= window,
-        F.transform(
-            F.sequence(F.lit(1), n - (window - 1)),
-            lambda i: F.array_min(F.slice(hs, i, window)),
-        ),
-    ).otherwise(F.array().cast("array<bigint>"))
-    fps = F.array_sort(F.array_distinct(wins))
+    # winnowing needs the positional sequence), then one min per window
+    hs = F.transform(ngrams(words(text_col), shingle_k), lambda s: stable_hash31(s))
+    fps = F.array_sort(F.array_distinct(ngrams(hs, window, F.array_min)))
+    # STAGE the fingerprint array as a real column: both outputs read it, and
+    # a column reference is computed once per row. The same rule holds inside
+    # every lambda: reference per-row values only through a lambda variable
+    # or a plain column, never an expression (which re-runs per element —
+    # ngrams binds its input once for exactly this reason).
+    staged = df.withColumn("__win_fps", fps)
+    fps = F.col("__win_fps")
     return staged.select(
         *df.columns,
         F.size(fps).cast("bigint").alias("n_winnow_fps"),
@@ -695,9 +679,11 @@ def repetition_features(df: DataFrame, text_col: str) -> DataFrame:
     training.
 
     Per-row array algebra only (no shuffle, no UDF): the within-document
-    mode count is max over distinct words of its occurrence count — an
-    O(distinct·len) JVM lambda over a ~10²-word array, the cheap-and-exact
-    form at document granularity. Emitted fractions are ratios of exact
+    mode count is max over distinct words of its occurrence count, an
+    O(distinct·len) interpreted lambda; the duplicate-bigram count compares
+    every bigram slot with every other, O(len²) per document. Both are
+    cheap over a ~10²-word array and dominate on long pages (a 5,000-word
+    document costs ~25M comparisons). Emitted fractions are ratios of exact
     integer counts (deterministic doubles, cross-engine stable):
 
     - rep_dup_word_frac: 1 − distinct/total words (0 = no word repeats)
@@ -706,13 +692,7 @@ def repetition_features(df: DataFrame, text_col: str) -> DataFrame:
     - rep_top_bigram_frac: most frequent bigram's share of all bigrams
     """
     ws = words(text_col)
-    bigrams = F.when(
-        F.size(ws) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - 1),
-            lambda i: F.concat_ws(" ", F.slice(ws, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = ngrams(ws, 2)
 
     def mode_count(arr: Column) -> Column:
         return F.array_max(
@@ -876,9 +856,9 @@ def top_ngrams(
     aggregate global occurrence count + document frequency and keep the
     top `n_top` by (count desc, bigram asc).
 
-    One explode + one groupBy shuffle; the per-document bigram construction
-    is transform(sequence(...)) — the same shape that scales MinHash
-    shingling. Document frequency is exact count(distinct doc_id).
+    One explode + one groupBy shuffle; the per-document bigrams come from
+    :func:`ngrams`, the primitive that builds MinHash shingles. Document
+    frequency is exact count(distinct doc_id).
     """
     toks = F.filter(
         F.transform(
@@ -887,13 +867,7 @@ def top_ngrams(
         ),
         lambda w: w != "",
     )
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = ngrams(toks, 2)
     return (
         df.select(F.col(doc_id_col).alias("__doc"), F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
@@ -1123,17 +1097,11 @@ def bpe_train_merges(
     steps: list[DataFrame] = []
     for step in range(1, n_merges + 1):
         vocab = vocab.localCheckpoint(eager=True)
-        syms = F.split(F.col("seq"), " ")
-        pair_arr = F.when(
-            F.size(syms) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(syms) - 1),
-                lambda i: F.struct(
-                    F.element_at(syms, i).alias("a"),
-                    F.element_at(syms, i + 1).alias("b"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
+        pair_arr = ngrams(
+            F.split(F.col("seq"), " "),
+            2,
+            lambda s: F.struct(s[0].alias("a"), s[1].alias("b")),
+        )
         top = (
             vocab.select(F.explode(pair_arr).alias("p"), "cnt")
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
@@ -1308,17 +1276,11 @@ def bigram_lm_scores(
     """
 
     def bigrams(df: DataFrame) -> DataFrame:
-        toks = F.filter(words(text_col), lambda w: w != "")
-        pairs = F.when(
-            F.size(toks) >= 2,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - 1),
-                lambda i: F.struct(
-                    F.element_at(toks, i).alias("w1"),
-                    F.element_at(toks, i + 1).alias("w2"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+        pairs = ngrams(
+            F.filter(words(text_col), lambda w: w != ""),
+            2,
+            lambda s: F.struct(s[0].alias("w1"), s[1].alias("w2")),
+        )
         return df.select(
             F.col(id_col), F.explode(pairs).alias("p")
         ).select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))

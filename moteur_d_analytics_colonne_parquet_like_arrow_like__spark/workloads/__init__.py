@@ -228,6 +228,28 @@ BEHAVIOR_CHANGED_SINCE: dict[str, tuple[int, str]] = {
         "corpus-proportional %10 sample: 36.9x at 10x); oracle bounded "
         "in step",
     ),
+    # r15: every n-gram site moved onto functions.ngrams, which tokenizes
+    # once per row instead of once per position. Output value-identical
+    # (tests/test_ngrams.py pins the old forms; local sweep green at
+    # sf0.01 and sf0.1), plan rewrite nonetheless. Listed: the gates whose
+    # plans run the new construction (the guard set in test_ngrams.py).
+    **dict.fromkeys(
+        (
+            "dedup_ngram_jaccard",
+            "dedup_minhash_lsh",
+            "dedup_ppjoin",
+            "text_fingerprint",
+            "text_winnow",
+            "text_repetition",
+            "top_ngrams",
+            "text_bigram_lm",
+            "sim_tfidf_sparse",
+            "sketch_heavy_hitters",
+            "text_heaps_law",
+            "text_zipf_fit",
+        ),
+        (15, "r15 n-gram construction on functions.ngrams (tokenize once per row)"),
+    ),
 }
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions import stable_hash60
+from ..functions import ngrams, stable_hash60
 from ..sources.catalog import load_table
 
 
@@ -366,18 +366,7 @@ def q_text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.filter(
         F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != ""
     )
-    tris = F.when(
-        F.size(toks) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    tris = ngrams(toks, 3)
     # n_tris needs NO trigram strings: a doc with n >= 3 tokens has
     # exactly n-2 trigrams (r12 — the size(tris) form re-ran the whole
     # transform/concat_ws pipeline per row just to measure the array,
@@ -555,18 +544,7 @@ def q_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.filter(
         F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda t: t != ""
     )
-    tris = F.when(
-        F.size(toks) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    tris = ngrams(toks, 3)
     vocab = (
         docs.select(F.explode(tris).alias("t"))
         .groupBy("t")

@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from ..functions import HASH31_PRIME, MINHASH_COEFFS, PERM_PRIME
+from ..functions import HASH31_PRIME, MINHASH_COEFFS, PERM_PRIME, ngrams
 from ..operators import dedup, multimodal, similarity, sorts, text
 from ..sources.catalog import load_table, table_path
 from ._scratch import derived
@@ -328,14 +328,7 @@ def q_sketch_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import sketches
 
     docs = _documents(spark, sf_dir)
-    ws = F.split(F.trim(F.col("text")), r"\s+")
-    grams = F.when(
-        F.size(ws) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ws) - 1),
-            lambda i: F.concat_ws(" ", F.slice(ws, i, 2)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = ngrams(F.split(F.trim(F.col("text")), r"\s+"), 2)
     items = docs.select(F.explode(grams).alias("item")).cache()
     hh = sketches.heavy_hitters_exact(items, "item", support_denom=1000)
     sk = sketches.cms_build(items, "item", depth=3, width=256)
@@ -1451,8 +1444,8 @@ ORACLES["chunk_documents"] = """
 def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level top-50 bigrams by (occurrences desc, bigram asc) with
     exact document frequency — one explode + one groupBy shuffle; the
-    per-document bigram construction is a transform(sequence(...))
-    expression, the same shape that scales MinHash shingling."""
+    per-document bigrams come from ``functions.ngrams``, the primitive
+    that builds MinHash shingles."""
     return text.top_ngrams(
         _documents(spark, sf_dir), "text", "doc_id", n_top=50
     )
